@@ -3276,9 +3276,15 @@ object DuckDialect {
               val vals = spark.sql(fused).collect().map { r =>
                 r.getInt(0) -> (if (r.isNullAt(1)) 0.0 else r.getDouble(1))
               }.toMap
+              // the replay must issue exactly the recorded probes: a
+              // misaligned walk throws (pass-through below), it never
+              // reads a default into the bound
               var i = -1
-              chainPairsAndBound(spark, p,
-                { _ => i += 1; vals.getOrElse(i, 0.0) })._1
+              val replayed = chainPairsAndBound(spark, p,
+                { _ => i += 1; vals(i) })._1
+              if (i + 1 != recorded.length) throw new IllegalStateException(
+                s"ASOF probe replay consumed ${i + 1} of ${recorded.length} probes")
+              replayed
             }
           }
           catch { case scala.util.control.NonFatal(_) => 0.0 }

@@ -24,9 +24,10 @@ import org.apache.spark.sql.types.StructType
   *   - untranslatable filters are reported via `unhandledFilters`, so
   *     Spark re-applies them above the scan (never dropped).
   *
-  * The snapshot VERSION is pinned at relation construction (analysis
-  * time), like Delta's own DataFrame reads: a concurrent commit between
-  * planning and execution cannot tear the row set.
+  * The SNAPSHOT is pinned at relation construction (analysis time),
+  * like Delta's own DataFrame reads: a concurrent commit between
+  * planning and execution cannot tear the row set, and the schema and
+  * every scan come from that one replay — a read lists the log once.
   *
   * Reference surface: `delta_scan('<path>')` through DuckDB
   * (delta-unity-duckdb.js:330) — here the format string is the
@@ -41,13 +42,11 @@ final class DeltaBatchRelation(
 
   private val spark = sqlContext.sparkSession
 
-  /** Pinned read version: explicit AS OF, else the latest at creation. */
-  private val version: Long = versionAsOf
-    .orElse(timestampAsOf.map(DeltaLog.versionAt(spark, tablePath, _)))
-    .getOrElse(DeltaLog.latestVersion(spark, tablePath))
+  /** Pinned snapshot: explicit AS OF, else the latest at creation. */
+  private val snap: DeltaLog.Snapshot = DeltaLog.snapshot(spark, tablePath,
+    versionAsOf.orElse(timestampAsOf.map(DeltaLog.versionAt(spark, tablePath, _))))
 
-  override val schema: StructType =
-    DeltaLog.snapshot(spark, tablePath, Some(version)).schema
+  override val schema: StructType = snap.schema
 
   override def unhandledFilters(filters: Array[Filter]): Array[Filter] =
     filters.filter(translate(_).isEmpty)
@@ -56,7 +55,7 @@ final class DeltaBatchRelation(
       filters: Array[Filter]): RDD[Row] = {
     val condition = filters.flatMap(translate)
       .reduceOption(_ && _).getOrElse(lit(true))
-    val df = DeltaLog.readWhere(spark, tablePath, condition, Some(version))
+    val df = DeltaLog.readWhere(spark, snap, condition)
     // empty projection (e.g. COUNT(*)) still needs a row per input row
     val projected =
       if (requiredColumns.isEmpty) df.select()
@@ -85,5 +84,5 @@ final class DeltaBatchRelation(
     case _ => None
   }
 
-  override def toString: String = s"GraftDelta[$tablePath@v$version]"
+  override def toString: String = s"GraftDelta[$tablePath@v${snap.version}]"
 }

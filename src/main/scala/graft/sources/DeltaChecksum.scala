@@ -27,9 +27,16 @@ import org.apache.spark.sql.SparkSession
   * their commits ([[DeltaMaintenance.cleanupLog]]).
   *
   * At 100 TB the verify is free (two longs compared against totals the
-  * replay already accumulated); the write costs one snapshot of the
-  * just-committed version — checkpoint + tail, the same bounded work
-  * any reader pays. Disable writes with
+  * replay already accumulated) and runs on every snapshot, cache hits
+  * included. The write needs the snapshot of the just-committed version,
+  * which [[DeltaLog.snapshot]] serves from its JVM-wide cache: the
+  * committer read the table before committing, so the cached plan is a
+  * prefix of the fresh one (same checkpoint, and the cached commit files
+  * unchanged in length and mtime) and only the new commit JSON is
+  * parsed — one listing, no checkpoint read, no Spark job. When the
+  * prefix rule fails (a checkpoint or compaction landed in between, or
+  * another process rewrote the log) the write pays a full replay, the
+  * same bounded work any reader pays. Disable writes with
   * `spark.graft.delta.writeChecksum=false`.
   */
 object DeltaChecksum {

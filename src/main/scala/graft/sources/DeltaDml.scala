@@ -83,6 +83,19 @@ object DeltaDml {
       })
   }
 
+  /** Qualified scan URI (the `__file` provenance value) → the log's
+    * relative path, for every live file of `snap`. One copy of the
+    * session's Hadoop conf serves the whole map, not one copy per file. */
+  private def scanUriToRel(spark: SparkSession,
+      snap: DeltaLog.Snapshot): Map[String, String] = {
+    val hconf = spark.sessionState.newHadoopConf()
+    snap.files.map { a =>
+      val abs = new Path(snap.tablePath,
+        java.net.URLDecoder.decode(a.path, "UTF-8"))
+      abs.getFileSystem(hconf).makeQualified(abs).toString -> a.path
+    }.toMap
+  }
+
   /** `cdcOf`: builds the commit's change-file rows (table columns +
     * `_change_type`) from the hit-file frame; materialized only when the
     * table has [[DeltaCdf.Property]] enabled. */
@@ -97,14 +110,7 @@ object DeltaDml {
     val snap = snapHint.getOrElse(DeltaLog.snapshot(spark, tablePath))
     DeltaLog.checkWritable(snap)
 
-    // Map absolute scan URIs back to the log's relative paths.
-    val uriToRel: Map[String, String] =
-      snap.files.map { a =>
-        val abs = new Path(tablePath,
-          java.net.URLDecoder.decode(a.path, "UTF-8"))
-        abs.getFileSystem(spark.sessionState.newHadoopConf())
-          .makeQualified(abs).toString -> a.path
-      }.toMap
+    val uriToRel = scanUriToRel(spark, snap)
 
     val hitUris =
       if (snap.files.isEmpty) Array.empty[String]
@@ -173,15 +179,12 @@ object DeltaDml {
     DeltaLog.checkWritable(snap)
     if (matchedUpdate.nonEmpty || matchedDelete.nonEmpty)
       DeltaLog.checkAppendOnly(snap, "MERGE with matched clauses")
-    val target = DeltaLog.read(spark, tablePath)
+    // the insert anti-join reads the SAME snapshot the hit detection and
+    // the commit use (see rewrite()): a second read could see a newer
+    // version than the one the merge decides against
+    val target = DeltaLog.scanFiles(spark, snap, snap.filePaths)
 
-    val uriToRel: Map[String, String] =
-      snap.files.map { a =>
-        val abs = new Path(tablePath,
-          java.net.URLDecoder.decode(a.path, "UTF-8"))
-        abs.getFileSystem(spark.sessionState.newHadoopConf())
-          .makeQualified(abs).toString -> a.path
-      }.toMap
+    val uriToRel = scanUriToRel(spark, snap)
 
     // Files containing at least one row a matched CLAUSE will act on
     // (file names only come back to the driver, never data). The gate

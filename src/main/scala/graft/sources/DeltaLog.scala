@@ -4,7 +4,7 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
@@ -24,6 +24,14 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * size, exactly how any Delta client bootstraps), then hand the
   * surviving parquet file list to the distributed scan. Filters and
   * column pruning push into that scan as with any parquet read.
+  *
+  * Replay is split into plan (one listing → bootstrap checkpoint +
+  * ordered replay files), apply (checkpoint and files folded into a
+  * replay state) and finish (protocol gates, the [[Snapshot]], the
+  * checksum tripwire). A JVM-wide, LRU-bounded snapshot cache keyed by
+  * the qualified log directory holds the last plan and state per table
+  * and extends them incrementally when the fresh plan continues the
+  * cached one — see [[snapshot]] for the validity rule.
   *
   * Scope (checked, not assumed): reader versions 1-3 — version 2's
   * column mapping in `name` mode, version 3's deletion vectors in the
@@ -294,90 +302,98 @@ object DeltaLog {
   /** Current (or as-of) table version. Checkpoint versions count: after
     * checkpoint + log cleanup a valid table may have no commit JSON at
     * its current version (mirrors snapshot()'s own horizon). */
-  def latestVersion(spark: SparkSession, tablePath: String): Long = {
-    val (_, commits, checkpoints, compacted) = listLog(spark, tablePath)
-    // Compacted range ends count too: a compacted file legitimizes
-    // deleting the commit JSONs it covers, so a log tail of the shape
-    // [compact 0..e, commits deleted, no newer checkpoint] is still a
-    // fully replayable table at version e.
-    (commits.keys ++ checkpoints.keys ++ compacted.keys.map(_._2))
-      .maxOption.getOrElse(
-        throw new IllegalStateException(s"no Delta commits under $tablePath"))
+  def latestVersion(spark: SparkSession, tablePath: String): Long =
+    listLog(spark, tablePath).latest.getOrElse(
+      throw new IllegalStateException(s"no Delta commits under $tablePath"))
+
+  /** One log artifact as listed: its path plus the length and mtime that
+    * identify this incarnation of it. Log files are write-once, so an
+    * unchanged (path, length, mtime) triple is an unchanged file; a file
+    * deleted and written again under the same name gets a new mtime. */
+  private[sources] final case class LogFile(path: Path, len: Long, mtime: Long)
+
+  private object LogFile {
+    def apply(st: FileStatus): LogFile =
+      LogFile(st.getPath, st.getLen, st.getModificationTime)
   }
 
-  /** List the log: commit JSONs by version, plus COMPLETE checkpoints by
-    * version. A multi-part checkpoint (`<v>.checkpoint.<i>.<n>.parquet`)
+  /** One classified listing of `_delta_log` (see [[listLog]]): commit
+    * JSONs by version, COMPLETE checkpoints by version (all parts), and
+    * log-compaction files by (start, end). */
+  private[sources] final case class LogListing(fs: FileSystem, dir: Path,
+      commits: Map[Long, LogFile], checkpoints: Map[Long, Seq[LogFile]],
+      compacted: Map[(Long, Long), LogFile]) {
+    /** Newest replayable version. Compacted range ends count too: a
+      * compacted file legitimizes deleting the commit JSONs it covers,
+      * so a log tail of the shape [compact 0..e, commits deleted, no
+      * newer checkpoint] is still a fully replayable table at version e. */
+    def latest: Option[Long] =
+      (commits.keys ++ checkpoints.keys ++ compacted.keys.map(_._2)).maxOption
+  }
+
+  /** List the log once (one LIST call — a metered, high-latency RPC on
+    * object stores — serves every artifact shape) and classify it.
+    * A multi-part checkpoint (`<v>.checkpoint.<i>.<n>.parquet`)
     * is trusted only when all n distinct parts are present — a reader
     * racing the part-rename publish (or landing after a crash mid-write)
     * must not bootstrap from a partial live-file set: replay starts at
     * v+1, so missing adds would be silent durable data loss, not an
     * error. Incomplete checkpoints are simply invisible; replay falls
     * back to the next older complete checkpoint or the full commit log. */
-  private[sources] def listLog(spark: SparkSession, tablePath: String)
-      : (FileSystem, Map[Long, Path], Map[Long, Seq[Path]],
-         Map[(Long, Long), Path]) = {
+  private[sources] def listLog(spark: SparkSession, tablePath: String): LogListing = {
     val dir = logDir(tablePath)
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(dir))
       throw new IllegalArgumentException(s"not a Delta table (no _delta_log): $tablePath")
-    val entries = fs.listStatus(dir).map(_.getPath)
-    val commits = entries.flatMap(p => p.getName match {
-      case VersionRe(v) => Some(v.toLong -> p)
-      case _ => None
-    }).toMap
-    // log-compaction files, from the SAME listing (LIST is a metered
-    // high-latency RPC on object stores — one call serves all shapes)
-    val compacted: Map[(Long, Long), Path] = entries.flatMap(p =>
-      p.getName match {
-        case CompactedRe(s, e) => Some((s.toLong, e.toLong) -> p)
-        case _ => None
-      }).toMap
-    val singles = entries.flatMap(p => p.getName match {
-      case SinglePartRe(v) => Some(v.toLong -> p)
-      case _ => None
-    }).toMap
-    val multis: Map[Long, Seq[Path]] = entries.flatMap(p => p.getName match {
-      case MultiPartRe(v, i, n) => Some(((v.toLong, n.toInt), i.toInt, p))
-      case _ => None
-    }).groupBy(_._1).collect {
+    val entries = fs.listStatus(dir).toSeq.map(LogFile(_))
+    def matching[A](f: PartialFunction[String, A]): Seq[(A, LogFile)] =
+      entries.flatMap(e => f.lift(e.path.getName).map(_ -> e))
+    val commits = matching { case VersionRe(v) => v.toLong }.toMap
+    val compacted = matching {
+      case CompactedRe(s, e) => (s.toLong, e.toLong)
+    }.toMap
+    val singles = matching { case SinglePartRe(v) => v.toLong }.toMap
+    val multis: Map[Long, Seq[LogFile]] = matching {
+      case MultiPartRe(v, i, n) => (v.toLong, n.toInt, i.toInt)
+    }.groupBy { case ((v, n, _), _) => (v, n) }.collect {
       // complete = exactly parts 1..n all present (distinct, no gaps)
-      case ((v, n), group) if group.map(_._2).toSet == (1 to n).toSet =>
-        v -> group.sortBy(_._2).map(_._3).toSeq
+      case ((v, n), group) if group.map(_._1._3).toSet == (1 to n).toSet =>
+        v -> group.sortBy(_._1._3).map(_._2)
     }
     // V2 checkpoints: <v>.checkpoint.<uuid>.parquet manifests whose add
     // entries live in _sidecars/. Several writers may race the same
     // version with different uuids — any one is a complete manifest, so
     // the lexically-first is picked deterministically.
-    val v2s: Map[Long, Seq[Path]] = entries.flatMap(p => p.getName match {
-      case V2Re(v, _) => Some(v.toLong -> p)
-      case _ => None
-    }).groupBy(_._1).map { case (v, g) =>
-      v -> Seq(g.map(_._2).minBy(_.getName))
+    val v2s: Map[Long, Seq[LogFile]] = matching {
+      case V2Re(v, _) => v.toLong
+    }.groupBy(_._1).map { case (v, g) =>
+      v -> Seq(g.map(_._2).minBy(_.path.getName))
     }
     // preference at the same version: any complete form is valid; the
     // single-part file is the cheapest bootstrap, v2 next, multi last
-    val listed = multis ++ v2s ++ singles.map { case (v, p) => v -> Seq(p) }
+    val listed = multis ++ v2s ++ singles.map { case (v, f) => v -> Seq(f) }
     // `_last_checkpoint` is TRUSTED first (the protocol's pointer —
     // what foreign readers consult): when it names a checkpoint the
     // listing missed (eventually-consistent stores list-lag renames),
-    // targeted existence probes adopt it; a corrupt/dangling pointer
+    // targeted status probes adopt it; a corrupt/dangling pointer
     // falls back to the listing silently. Versions the listing DOES
     // know keep their listed artifact set (completeness was validated).
-    val pointed: Map[Long, Seq[Path]] =
+    def probe(p: Path): Option[LogFile] =
+      try Some(LogFile(fs.getFileStatus(p)))
+      catch { case _: java.io.FileNotFoundException => None }
+    val pointed: Map[Long, Seq[LogFile]] =
       readLastCheckpoint(fs, dir) match {
         case Some((v, partsOpt)) if !listed.contains(v) =>
-          partsOpt match {
-            case None =>
-              val p = new Path(dir, f"$v%020d.checkpoint.parquet")
-              if (fs.exists(p)) Map(v -> Seq(p)) else Map.empty
-            case Some(n) =>
-              val ps = (1 to n).map(i =>
-                new Path(dir, f"$v%020d.checkpoint.$i%010d.$n%010d.parquet"))
-              if (ps.forall(fs.exists)) Map(v -> ps.toSeq) else Map.empty
+          val ps = partsOpt match {
+            case None => Seq(new Path(dir, f"$v%020d.checkpoint.parquet"))
+            case Some(n) => (1 to n).map(i =>
+              new Path(dir, f"$v%020d.checkpoint.$i%010d.$n%010d.parquet"))
           }
+          val found = ps.flatMap(probe)
+          if (found.size == ps.size) Map(v -> found) else Map.empty
         case _ => Map.empty
       }
-    (fs, commits, listed ++ pointed, compacted)
+    LogListing(fs, dir, commits, listed ++ pointed, compacted)
   }
 
   /** Parse `_delta_log/_last_checkpoint`: (version, parts). None when
@@ -407,15 +423,13 @@ object DeltaLog {
     * checkpoint file's mtime. */
   def versionAt(spark: SparkSession, tablePath: String,
       ts: java.sql.Timestamp): Long = {
-    val (fs, commits, checkpoints, _) = listLog(spark, tablePath)
+    val log = listLog(spark, tablePath)
     val times: Map[Long, Long] =
-      (checkpoints.map { case (v, ps) =>
-        v -> ps.map(p => fs.getFileStatus(p).getModificationTime).max
-      } ++ commits.map { case (v, p) =>  // commit mtime wins over checkpoint
-        v -> fs.getFileStatus(p).getModificationTime
-      } ++ commits.flatMap { case (v, p) => // in-commit timestamp wins over all
-        readIct(fs, p).map(v -> _)
-      }).toMap
+      (log.checkpoints.map { case (v, ps) => v -> ps.map(_.mtime).max } ++
+        log.commits.map { case (v, c) => v -> c.mtime } ++ // commit mtime wins over checkpoint
+        log.commits.flatMap { case (v, c) => // in-commit timestamp wins over all
+          readIct(log.fs, c.path).map(v -> _)
+        }).toMap
     val at = times.filter(_._2 <= ts.getTime).keys.maxOption
     at.getOrElse(throw new IllegalArgumentException(
       if (times.isEmpty)
@@ -465,37 +479,108 @@ object DeltaLog {
     if (!fs.exists(p)) None else readIct(fs, p)
   }
 
-  /** Replay the log to `versionAsOf` (default: latest). */
-  def snapshot(spark: SparkSession, tablePath: String,
-      versionAsOf: Option[Long] = None): Snapshot = {
-    val (fs, commits, checkpoints, compacted) = listLog(spark, tablePath)
-    // compacted ends participate (see latestVersion): replay can serve a
-    // tail whose commit JSONs were deleted behind a compacted range.
-    val latest = (commits.keys ++ checkpoints.keys ++
-      compacted.keys.map(_._2)).maxOption.getOrElse(
+  /** What replaying to `version` reads: the bootstrap checkpoint (its
+    * version and parts), then the ordered commit / compacted files after
+    * it. Pure function of one listing — no I/O. */
+  private final case class ReplayPlan(version: Long,
+      checkpoint: Option[(Long, Seq[LogFile])], replay: Vector[LogFile]) {
+    /** The state this plan produced extends to `fresh`'s state by
+      * applying `fresh.replay.drop(replay.size)`: same checkpoint, and
+      * this plan's replay files lead `fresh`'s with identical length and
+      * mtime. Replay is a left fold, so the extension is exactly the
+      * full replay of `fresh`. */
+    def isPrefixOf(fresh: ReplayPlan): Boolean =
+      checkpoint == fresh.checkpoint && fresh.replay.startsWith(replay)
+  }
+
+  private def planReplay(log: LogListing, tablePath: String,
+      versionAsOf: Option[Long]): ReplayPlan = {
+    // compacted ends participate (see LogListing.latest): replay can
+    // serve a tail whose commit JSONs were deleted behind a compacted range.
+    val latest = log.latest.getOrElse(
       throw new IllegalStateException(s"empty _delta_log under $tablePath"))
     val target = versionAsOf.getOrElse(latest)
     require(target <= latest, s"version $target > latest $latest for $tablePath")
+    // Start from the newest checkpoint at-or-before the target: its rows
+    // are the complete live state at that version (removes in it are
+    // vacuum tombstones, not pending deletes).
+    val ckpt = log.checkpoints.filter(_._1 <= target).maxByOption(_._1)
+    // Log-compaction files (`<s>.<e>.compacted.json`, protocol-optional)
+    // hold the action reconciliation of their whole range in commit-JSON
+    // form. Replay prefers the LONGEST compacted file COVERING the
+    // cursor whose end fits the target (s ≤ cursor ≤ e) — on a long
+    // tail past the last checkpoint that's one file open instead of
+    // e−s+1. A cursor strictly inside the range (a checkpoint landed
+    // mid-range before compaction) is fine: re-applying the range's
+    // already-checkpointed prefix is idempotent — adds/removes re-apply
+    // onto the same live map and metaData/protocol/txn/domain carry
+    // latest-wins semantics — and without the covering jump a tail
+    // whose commit JSONs were deleted behind the compaction (which
+    // latestVersion explicitly advertises as replayable) would throw
+    // 'missing commit'. The individual commits stay authoritative for
+    // time travel INSIDE the range and for CDF/ICT reads, which always
+    // address exact versions.
+    val replay = Vector.newBuilder[LogFile]
+    var cursor = ckpt.map(_._1 + 1).getOrElse(0L)
+    while (cursor <= target) {
+      val jump = log.compacted.collect {
+        case ((s, e), f) if s <= cursor && e >= cursor && e <= target => (e, f)
+      }
+      jump.maxByOption(_._1) match {
+        case Some((e, f)) => replay += f; cursor = e + 1
+        case None =>
+          replay += log.commits.getOrElse(cursor,
+            throw new IllegalStateException(
+              s"missing Delta commit $cursor under $tablePath"))
+          cursor += 1
+      }
+    }
+    ReplayPlan(target, ckpt, replay.result())
+  }
 
+  /** The table state a replay produces, frozen: what a [[Snapshot]] is
+    * built from, and what the snapshot cache holds. `files` keeps the
+    * live map's insertion order, which is the snapshot's file order. */
+  private final case class ReplayState(files: Vector[AddEntry],
+      txns: Map[String, Long], domains: Map[String, String],
+      schemaString: String, partCols: Seq[String],
+      config: Map[String, String], mdId: Option[String],
+      protocol: TableProtocol) {
+    def thaw: Replay = {
+      val r = new Replay
+      files.foreach(a => r.live(a.path) = a)
+      r.txns ++= txns; r.domains ++= domains
+      r.schemaString = schemaString; r.partCols = partCols
+      r.config = config; r.mdId = mdId; r.protocol = protocol
+      r
+    }
+  }
+
+  /** The mutable accumulator one replay folds log actions into: last
+    * `metaData` / `protocol` win, `add` puts a file into the live set,
+    * `remove` tombstones it. */
+  private final class Replay {
     val live = mutable.LinkedHashMap[String, AddEntry]()
     val txns = mutable.Map[String, Long]()
-    val domains = mutable.LinkedHashMap[String, String]()
+    val domains = mutable.Map[String, String]()
     var schemaString: String = null
     var partCols: Seq[String] = Nil
     var config: Map[String, String] = Map.empty
     var mdId: Option[String] = None
-    var protocolInfo: TableProtocol = TableProtocol()
+    var protocol: TableProtocol = TableProtocol()
 
-    // One JSON action line (commit, compacted-log, or V2 JSON-manifest
-    // form) applied to the accumulating state. `sidecarSink` collects
-    // sidecar references — only manifests carry them; its presence also
-    // marks checkpoint-bootstrap context, where `remove` lines are
-    // vacuum tombstones (not pending deletes) and must be IGNORED —
-    // mirroring the parquet manifest branch, which never selects the
-    // remove column. A spec-reconciled manifest carries no add+remove
-    // conflict, but a foreign non-reconciled one must not produce a
-    // different live set depending on manifest form.
-    def processNode(node: com.fasterxml.jackson.databind.JsonNode,
+    def freeze: ReplayState = ReplayState(live.values.toVector, txns.toMap,
+      domains.toMap, schemaString, partCols, config, mdId, protocol)
+
+    /** One JSON action line (commit, compacted-log, or V2 JSON-manifest
+      * form). `sidecarSink` collects sidecar references — only manifests
+      * carry them; its presence also marks checkpoint-bootstrap context,
+      * where `remove` lines are vacuum tombstones (not pending deletes)
+      * and must be IGNORED — mirroring the parquet manifest branch, which
+      * never selects the remove column. A spec-reconciled manifest
+      * carries no add+remove conflict, but a foreign non-reconciled one
+      * must not produce a different live set depending on manifest form. */
+    def processNode(node: JsonNode,
         sidecarSink: Option[mutable.Buffer[String]] = None): Unit = {
       val bootstrapCtx = sidecarSink.isDefined
       val add = node.get("add"); val rm = node.get("remove")
@@ -536,7 +621,7 @@ object DeltaLog {
       }
       if (proto != null) {
         checkProtocol(proto.get("minReaderVersion").asInt())
-        protocolInfo = TableProtocol(
+        protocol = TableProtocol(
           proto.get("minReaderVersion").asInt(),
           proto.get("minWriterVersion").asInt(),
           if (proto.hasNonNull("readerFeatures"))
@@ -558,164 +643,240 @@ object DeltaLog {
       if (sc != null) sidecarSink.foreach(_ += sc.get("path").asText())
     }
 
-    // Start from the newest checkpoint at-or-before the target: its rows
-    // are the complete live state at that version (removes in it are
-    // vacuum tombstones, not pending deletes).
-    val ckptVersion = checkpoints.keys.filter(_ <= target).maxOption
-    ckptVersion.foreach { v =>
-      def processAdd(a: Row): Unit = {
-        val path = a.getAs[String]("path")
-        val stats =
-          if (a.schema.fieldNames.contains("stats"))
-            Option(a.getAs[String]("stats"))
-          else None
-        val dv =
-          if (a.schema.fieldNames.contains("deletionVector") &&
-              a.getAs[AnyRef]("deletionVector") != null) {
-            val d = a.getAs[Row]("deletionVector")
-            val st = d.getAs[String]("storageType")
-            checkDvStorage(st)
-            def lf(n: String, dflt: Long): Long =
-              if (d.schema.fieldNames.contains(n) && !d.isNullAt(d.fieldIndex(n)))
-                d.getAs[Long](n)
-              else dflt
-            Some(DvDescriptor(
-              dvPathOf(st, d.getAs[String]("pathOrInlineDv")),
-              d.getAs[Long]("cardinality"), lf("offset", 1L), lf("sizeInBytes", 0L),
-              st, d.getAs[String]("pathOrInlineDv")))
-          } else None
-        def optLong(n: String): Option[Long] =
-          if (a.schema.fieldNames.contains(n) && !a.isNullAt(a.fieldIndex(n)))
-            Some(a.getAs[Long](n))
-          else None
-        live(path) = AddEntry(path, a.getAs[Long]("size"), stats, dv,
-          optLong("baseRowId"), optLong("defaultRowCommitVersion"))
-      }
-      val paths = checkpoints(v)
-      val sidecarFiles = mutable.Buffer[String]()
-      if (paths.size == 1 && paths.head.getName.endsWith(".json")) {
-        // V2 JSON-manifest form (`<v>.checkpoint.<uuid>.json`): the same
-        // actions as the parquet manifest, one JSON per line — foreign
-        // writers may emit either; sidecars are always parquet.
-        withLogLines(fs, paths.head)(_.foreach(l =>
-          processNode(mapper.readTree(l), Some(sidecarFiles))))
-      } else {
-      val rows = spark.read.parquet(paths.map(_.toString): _*)
+    /** One checkpoint `add` row (parquet manifest, multi-part part, or
+      * V2 sidecar). */
+    def processAdd(a: Row): Unit = {
+      val path = a.getAs[String]("path")
+      val stats =
+        if (a.schema.fieldNames.contains("stats"))
+          Option(a.getAs[String]("stats"))
+        else None
+      val dv =
+        if (a.schema.fieldNames.contains("deletionVector") &&
+            a.getAs[AnyRef]("deletionVector") != null) {
+          val d = a.getAs[Row]("deletionVector")
+          val st = d.getAs[String]("storageType")
+          checkDvStorage(st)
+          def lf(n: String, dflt: Long): Long =
+            if (d.schema.fieldNames.contains(n) && !d.isNullAt(d.fieldIndex(n)))
+              d.getAs[Long](n)
+            else dflt
+          Some(DvDescriptor(
+            dvPathOf(st, d.getAs[String]("pathOrInlineDv")),
+            d.getAs[Long]("cardinality"), lf("offset", 1L), lf("sizeInBytes", 0L),
+            st, d.getAs[String]("pathOrInlineDv")))
+        } else None
+      def optLong(n: String): Option[Long] =
+        if (a.schema.fieldNames.contains(n) && !a.isNullAt(a.fieldIndex(n)))
+          Some(a.getAs[Long](n))
+        else None
+      live(path) = AddEntry(path, a.getAs[Long]("size"), stats, dv,
+        optLong("baseRowId"), optLong("defaultRowCommitVersion"))
+    }
+  }
+
+  /** Load checkpoint `v` (any complete form) into `r`. The one replay
+    * step that launches Spark jobs: parquet checkpoints and V2 sidecars
+    * are read through `spark.read`. */
+  private def bootstrap(spark: SparkSession, tablePath: String,
+      fs: FileSystem, v: Long, parts: Seq[LogFile], r: Replay): Unit = {
+    val sidecarFiles = mutable.Buffer[String]()
+    if (parts.size == 1 && parts.head.path.getName.endsWith(".json")) {
+      // V2 JSON-manifest form (`<v>.checkpoint.<uuid>.json`): the same
+      // actions as the parquet manifest, one JSON per line — foreign
+      // writers may emit either; sidecars are always parquet.
+      withLogLines(fs, parts.head.path)(_.foreach(l =>
+        r.processNode(mapper.readTree(l), Some(sidecarFiles))))
+    } else {
+      val rows = spark.read.parquet(parts.map(_.path.toString): _*)
       val cols = rows.columns.toSet
       val wanted = Seq("add", "metaData", "protocol", "txn", "sidecar",
         "domainMetadata").filter(cols)
       rows.select(wanted.map(org.apache.spark.sql.functions.col): _*)
         .collect() // checkpoint = table METADATA; size is O(#files), not data
-        .foreach { r =>
+        .foreach { row =>
           wanted.zipWithIndex.foreach {
-            case ("add", i) if !r.isNullAt(i) =>
-              processAdd(r.getStruct(i))
-            case ("sidecar", i) if !r.isNullAt(i) =>
-              sidecarFiles += r.getStruct(i).getAs[String]("path")
-            case ("metaData", i) if !r.isNullAt(i) =>
-              val m = r.getStruct(i)
-              schemaString = m.getAs[String]("schemaString")
-              partCols = m.getAs[scala.collection.Seq[String]]("partitionColumns").toSeq
+            case ("add", i) if !row.isNullAt(i) =>
+              r.processAdd(row.getStruct(i))
+            case ("sidecar", i) if !row.isNullAt(i) =>
+              sidecarFiles += row.getStruct(i).getAs[String]("path")
+            case ("metaData", i) if !row.isNullAt(i) =>
+              val m = row.getStruct(i)
+              r.schemaString = m.getAs[String]("schemaString")
+              r.partCols = m.getAs[scala.collection.Seq[String]]("partitionColumns").toSeq
               if (m.schema.fieldNames.contains("configuration")) {
                 val c = m.getAs[scala.collection.Map[String, String]]("configuration")
-                if (c != null) config = c.toMap
+                if (c != null) r.config = c.toMap
               }
-              mdId = Option(m.getAs[String]("id"))
-            case ("protocol", i) if !r.isNullAt(i) =>
-              val p = r.getStruct(i)
+              r.mdId = Option(m.getAs[String]("id"))
+            case ("protocol", i) if !row.isNullAt(i) =>
+              val p = row.getStruct(i)
               checkProtocol(p.getAs[Int]("minReaderVersion"))
               def feats(field: String): Seq[String] =
                 if (p.schema.fieldNames.contains(field) &&
                     !p.isNullAt(p.fieldIndex(field)))
                   p.getAs[scala.collection.Seq[String]](field).toSeq
                 else Nil
-              protocolInfo = TableProtocol(
+              r.protocol = TableProtocol(
                 p.getAs[Int]("minReaderVersion"),
                 p.getAs[Int]("minWriterVersion"),
                 feats("readerFeatures"), feats("writerFeatures"))
-            case ("txn", i) if !r.isNullAt(i) =>
-              val t = r.getStruct(i)
-              txns(t.getAs[String]("appId")) = t.getAs[Long]("version")
-            case ("domainMetadata", i) if !r.isNullAt(i) =>
-              val dm = r.getStruct(i)
+            case ("txn", i) if !row.isNullAt(i) =>
+              val t = row.getStruct(i)
+              r.txns(t.getAs[String]("appId")) = t.getAs[Long]("version")
+            case ("domainMetadata", i) if !row.isNullAt(i) =>
+              val dm = row.getStruct(i)
               val removed = dm.schema.fieldNames.contains("removed") &&
                 !dm.isNullAt(dm.fieldIndex("removed")) &&
                 dm.getAs[Boolean]("removed")
-              if (removed) domains.remove(dm.getAs[String]("domain"))
-              else domains(dm.getAs[String]("domain")) =
+              if (removed) r.domains.remove(dm.getAs[String]("domain"))
+              else r.domains(dm.getAs[String]("domain")) =
                 dm.getAs[String]("configuration")
             case _ =>
           }
         }
+    }
+    // V2 checkpoints keep the file actions in sidecar parquet under
+    // _delta_log/_sidecars/ (relative names per the protocol). A
+    // referenced-but-missing sidecar is a HARD error — bootstrapping
+    // from the surviving subset would silently drop live files, the
+    // exact failure mode the multi-part completeness check exists to
+    // prevent.
+    if (sidecarFiles.nonEmpty) {
+      val scDir = new Path(logDir(tablePath), "_sidecars")
+      val paths = sidecarFiles.toSeq.map { p =>
+        if (p.contains("://") || p.startsWith("/")) p
+        else new Path(scDir, p).toString
       }
-      // V2 checkpoints keep the file actions in sidecar parquet under
-      // _delta_log/_sidecars/ (relative names per the protocol). A
-      // referenced-but-missing sidecar is a HARD error — bootstrapping
-      // from the surviving subset would silently drop live files, the
-      // exact failure mode the multi-part completeness check exists to
-      // prevent.
-      if (sidecarFiles.nonEmpty) {
-        val scDir = new Path(logDir(tablePath), "_sidecars")
-        val paths = sidecarFiles.toSeq.map { p =>
-          if (p.contains("://") || p.startsWith("/")) p
-          else new Path(scDir, p).toString
-        }
-        paths.foreach { p =>
-          if (!fs.exists(new Path(p))) throw new IllegalStateException(
-            s"v2 checkpoint at version $v of $tablePath references a " +
-              s"missing sidecar $p — refusing a partial live-file set")
-        }
-        spark.read.parquet(paths: _*).select("add").collect().foreach { r =>
-          if (!r.isNullAt(0)) processAdd(r.getStruct(0))
-        }
+      paths.foreach { p =>
+        if (!fs.exists(new Path(p))) throw new IllegalStateException(
+          s"v2 checkpoint at version $v of $tablePath references a " +
+            s"missing sidecar $p — refusing a partial live-file set")
+      }
+      spark.read.parquet(paths: _*).select("add").collect().foreach { row =>
+        if (!row.isNullAt(0)) r.processAdd(row.getStruct(0))
       }
     }
+  }
 
-    val from = ckptVersion.map(_ + 1).getOrElse(0L)
-    // Log-compaction files (`<s>.<e>.compacted.json`, protocol-optional)
-    // hold the action reconciliation of their whole range in commit-JSON
-    // form. Replay prefers the LONGEST compacted file COVERING the
-    // cursor whose end fits the target (s ≤ cursor ≤ e) — on a long
-    // tail past the last checkpoint that's one file open instead of
-    // e−s+1. A cursor strictly inside the range (a checkpoint landed
-    // mid-range before compaction) is fine: re-applying the range's
-    // already-checkpointed prefix is idempotent — adds/removes re-apply
-    // onto the same live map and metaData/protocol/txn/domain carry
-    // latest-wins semantics — and without the covering jump a tail
-    // whose commit JSONs were deleted behind the compaction (which
-    // latestVersion explicitly advertises as replayable) would throw
-    // 'missing commit'. The individual commits stay authoritative for
-    // time travel INSIDE the range and for CDF/ICT reads, which always
-    // address exact versions.
-    val replayFiles = mutable.Buffer[Path]()
-    var cursor = from
-    while (cursor <= target) {
-      val jump = compacted.collect {
-        case ((s, e), p) if s <= cursor && e >= cursor && e <= target =>
-          (e, p)
-      }
-      jump.maxByOption(_._1) match {
-        case Some((e, p)) => replayFiles += p; cursor = e + 1
-        case None =>
-          replayFiles += commits.getOrElse(cursor,
-            throw new IllegalStateException(
-              s"missing Delta commit $cursor under $tablePath"))
-          cursor += 1
-      }
+  /** Apply commit / compacted JSON files, in order, to `r`. */
+  private def applyFiles(fs: FileSystem, r: Replay,
+      files: Seq[LogFile]): ReplayState = {
+    files.foreach(f => withLogLines(fs, f.path)(
+      _.foreach(line => r.processNode(mapper.readTree(line)))))
+    r.freeze
+  }
+
+  /** Full replay of `plan`: checkpoint bootstrap, then every replay file. */
+  private def replay(spark: SparkSession, tablePath: String, fs: FileSystem,
+      plan: ReplayPlan): ReplayState = {
+    val r = new Replay
+    plan.checkpoint.foreach { case (v, parts) =>
+      bootstrap(spark, tablePath, fs, v, parts, r)
     }
-    replayFiles.foreach(commit => withLogLines(fs, commit)(
-      _.foreach(line => processNode(mapper.readTree(line)))))
+    applyFiles(fs, r, plan.replay)
+  }
 
-    require(schemaString != null, s"no metaData action in log of $tablePath")
-    checkReaderFeatures(protocolInfo, tablePath)
-    val snap = Snapshot(target,
-      DataType.fromJson(schemaString).asInstanceOf[StructType],
-      partCols, live.values.toSeq, tablePath, txns.toMap, config, mdId,
-      protocolInfo, domains.toMap)
+  /** Gates and tripwire, run on EVERY returned snapshot (cache hit or
+    * not): the protocol and reader-feature gates on the final protocol,
+    * then the version checksum check. */
+  private def finish(spark: SparkSession, tablePath: String, version: Long,
+      s: ReplayState): Snapshot = {
+    require(s.schemaString != null, s"no metaData action in log of $tablePath")
+    checkProtocol(s.protocol.minReader)
+    checkReaderFeatures(s.protocol, tablePath)
+    val snap = Snapshot(version,
+      DataType.fromJson(s.schemaString).asInstanceOf[StructType],
+      s.partCols, s.files, tablePath, s.txns, s.config, s.mdId,
+      s.protocol, s.domains)
     // version-checksum tripwire: replayed totals must match the crc the
     // committer recorded for this version, when one exists
     DeltaChecksum.verify(spark, snap)
     snap
+  }
+
+  /** JVM-wide snapshot cache: qualified log dir → the plan and frozen
+    * state of the last replay of that table. Small and LRU-bounded; each
+    * entry holds one table's live-file list. */
+  private object SnapshotCache {
+    final case class Entry(plan: ReplayPlan, state: ReplayState)
+    private val MaxEntries = 16
+    private val entries =
+      new java.util.LinkedHashMap[String, Entry](MaxEntries, 0.75f, true) {
+        override def removeEldestEntry(
+            e: java.util.Map.Entry[String, Entry]): Boolean =
+          size() > MaxEntries
+      }
+
+    /** Snapshots served from an entry / by a full replay. */
+    val hits, replays = new java.util.concurrent.atomic.AtomicLong
+
+    def get(key: String): Option[Entry] =
+      entries.synchronized(Option(entries.get(key)))
+
+    /** Store `e` unless the entry already held is for a NEWER version
+      * and still valid against `log` — time travel to an old version must
+      * not push a table's current state out. A held entry the log no
+      * longer supports (newer checkpoint, compaction, table recreated)
+      * is always replaced. */
+    def offer(key: String, log: LogListing, tablePath: String,
+        e: Entry): Unit = entries.synchronized {
+      val keep = Option(entries.get(key)).exists { held =>
+        held.plan.version > e.plan.version && scala.util.Try(
+          planReplay(log, tablePath, Some(held.plan.version)) == held.plan)
+          .getOrElse(false)
+      }
+      if (!keep) entries.put(key, e)
+    }
+  }
+
+  /** Replay the log to `versionAsOf` (default: latest).
+    *
+    * Every call lists the log once (freshness) and plans the replay from
+    * that listing. The JVM-wide snapshot cache then serves the state
+    * incrementally, the way Delta clients update a cached snapshot: when
+    * the cached plan for this table is a prefix of the fresh one (same
+    * checkpoint; cached replay files lead the fresh list with identical
+    * length and mtime), only the remaining commit files are parsed onto
+    * the cached state — no checkpoint read, no Spark job. Any other case
+    * (time travel below the cached version, a newer checkpoint, a
+    * compacted file in the tail, cleaned or missing commits, a table
+    * deleted and recreated) is a full replay that re-seeds the entry,
+    * except that an older version never evicts a newer entry the log
+    * still supports (see `SnapshotCache.offer`). Either way the result is structurally the snapshot a fresh replay
+    * builds, `files` order included, and the protocol gates and checksum
+    * tripwire run on it. */
+  def snapshot(spark: SparkSession, tablePath: String,
+      versionAsOf: Option[Long] = None): Snapshot = {
+    val log = listLog(spark, tablePath)
+    val plan = planReplay(log, tablePath, versionAsOf)
+    val key = log.fs.makeQualified(log.dir).toString
+    val state = SnapshotCache.get(key).filter(_.plan.isPrefixOf(plan)) match {
+      case Some(hit) =>
+        SnapshotCache.hits.incrementAndGet()
+        if (hit.plan == plan) hit.state
+        else applyFiles(log.fs, hit.state.thaw,
+          plan.replay.drop(hit.plan.replay.size))
+      case None =>
+        SnapshotCache.replays.incrementAndGet()
+        replay(spark, tablePath, log.fs, plan)
+    }
+    val snap = finish(spark, tablePath, plan.version, state)
+    SnapshotCache.offer(key, log, tablePath, SnapshotCache.Entry(plan, state))
+    snap
+  }
+
+  /** (snapshots served from the cache, full replays) since JVM start. */
+  private[graft] def snapshotCacheCounts: (Long, Long) =
+    (SnapshotCache.hits.get, SnapshotCache.replays.get)
+
+  /** A full replay that neither reads nor seeds the snapshot cache — the
+    * reference a cached [[snapshot]] must equal. */
+  private[graft] def replayUncached(spark: SparkSession, tablePath: String,
+      versionAsOf: Option[Long] = None): Snapshot = {
+    val log = listLog(spark, tablePath)
+    val plan = planReplay(log, tablePath, versionAsOf)
+    finish(spark, tablePath, plan.version, replay(spark, tablePath, log.fs, plan))
   }
 
   /** Read a Delta table as a DataFrame (optionally time-traveled). The
@@ -748,8 +909,12 @@ object DeltaLog {
     * three files whose [min,max] straddle a point predicate and opening
     * the table. */
   def readWhere(spark: SparkSession, tablePath: String, condition: Column,
-      versionAsOf: Option[Long] = None): DataFrame = {
-    val snap = snapshot(spark, tablePath, versionAsOf)
+      versionAsOf: Option[Long] = None): DataFrame =
+    readWhere(spark, snapshot(spark, tablePath, versionAsOf), condition)
+
+  /** [[readWhere]] over an already-pinned snapshot (no log access). */
+  private[sources] def readWhere(spark: SparkSession, snap: Snapshot,
+      condition: Column): DataFrame = {
     // Partition values become point ranges in each file's skipping stats,
     // so partition predicates prune files exactly like clustered-column
     // ranges do (files without any skippable info always survive).

@@ -381,7 +381,7 @@ object DeltaMaintenance {
     // validates multi-part completeness): trusting a partial checkpoint
     // left by a crashed writer would delete the only replayable record
     // of those commits — durable data loss, not a retention trim.
-    val ckpt = DeltaLog.listLog(spark, tablePath)._3.keys.maxOption
+    val ckpt = DeltaLog.listLog(spark, tablePath).checkpoints.keys.maxOption
     ckpt match {
       case None => 0
       case Some(horizon) =>
@@ -554,11 +554,11 @@ object DeltaMaintenance {
     // cleaned past its remove) falls back to file mtime — conservative
     // for fresh writes, best-effort for ancient orphans.
     val tombstones: Map[String, Long] = {
-      val (lfs, commits, _, _) = DeltaLog.listLog(spark, tablePath)
+      val log = DeltaLog.listLog(spark, tablePath)
       val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
       val acc = scala.collection.mutable.Map[String, Long]()
-      commits.values.foreach { c =>
-        DeltaLog.withLogLines(lfs, c)(_.foreach { line =>
+      log.commits.values.foreach { c =>
+        DeltaLog.withLogLines(log.fs, c.path)(_.foreach { line =>
           val rm = mapper.readTree(line).get("remove")
           if (rm != null) {
             val p = fs.makeQualified(new Path(tablePath,
