@@ -33,7 +33,9 @@ final class PathResolver(mapping: Map[String, String] = Map.empty)
           throw new IllegalArgumentException(s"unknown catalog table: $ref"))
       else ref
     // Delta tables resolve through the transaction log (the reference's
-    // delta_scan path); anything else is a plain parquet file/directory.
+    // delta_scan path): the scan is planned from the log, so resolving
+    // launches no Spark job and the schema is the snapshot's. Anything
+    // else is a plain parquet file/directory.
     if (graft.sources.DeltaLog.isDeltaTable(spark, path))
       graft.sources.DeltaLog.read(spark, path)
     else spark.read.parquet(path)

@@ -11,7 +11,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.{coalesce, col, lit}
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.GraftColumnBridge.{AttrView, FnView, LitView, NodeView}
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.{DataType, StructField, StructType, TimestampNTZType, TimestampType}
 
 /** File-level data skipping — the Delta stats protocol (`add.stats` JSON
   * with `numRecords` / `minValues` / `maxValues` / `nullCount`) plus the
@@ -37,8 +37,11 @@ object DataSkipping {
 
   /** Delta `add.stats` JSON for one parquet file, from its footer.
     * Min/max recorded for top-level int32/int64/float/double and UTF8
-    * binary columns (timestamps excluded: parquet nanos/micros logical
-    * types do not round-trip through JSON unambiguously). */
+    * binary columns, and for INT64 `TIMESTAMP(MILLIS|MICROS)` columns in
+    * the protocol's JSON form at millisecond precision, floored
+    * (`2024-01-02T03:04:05.678Z` when adjusted to UTC, no zone suffix for
+    * timestamp_ntz) — [[canMatch]] widens the maxima back by 1 ms. Other
+    * time types (nanos, INT96, TIME) record no range. */
   def statsJson(conf: Configuration, file: Path): Option[String] = {
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
     try {
@@ -49,6 +52,8 @@ object DataSkipping {
       val nulls = mapper.createObjectNode()
       val seen = scala.collection.mutable.LinkedHashMap[
         String, (Option[Any], Option[Any], Long, Boolean)]()
+      // timestamp columns: raw INT64 values merge as longs, render last
+      val timestamps = scala.collection.mutable.Map[String, Long => String]()
       footer.forEach { block =>
         numRecords += block.getRowCount
         block.getColumns.forEach { c =>
@@ -62,10 +67,18 @@ object DataSkipping {
             val isTimestampish =
               logical.isInstanceOf[LogicalTypeAnnotation.TimestampLogicalTypeAnnotation] ||
               logical.isInstanceOf[LogicalTypeAnnotation.TimeLogicalTypeAnnotation]
-            val supported = !isTimestampish && (isString || (prim.getPrimitiveTypeName match {
-              case INT32 | INT64 | FLOAT | DOUBLE => true
-              case _ => false
-            }))
+            logical match {
+              case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
+                  if prim.getPrimitiveTypeName == INT64 &&
+                    t.getUnit != LogicalTypeAnnotation.TimeUnit.NANOS =>
+                timestamps(name) = timestampJson(t)
+              case _ =>
+            }
+            val supported = timestamps.contains(name) ||
+              (!isTimestampish && (isString || (prim.getPrimitiveTypeName match {
+                case INT32 | INT64 | FLOAT | DOUBLE => true
+                case _ => false
+              })))
             val (mn, mx): (Option[Any], Option[Any]) =
               if (supported && st != null && st.hasNonNullValue)
                 (Some(genericValue(st.genericGetMin, isString)),
@@ -84,8 +97,12 @@ object DataSkipping {
       }
       seen.foreach { case (name, (mn, mx, nc, supported)) =>
         if (supported) {
-          mn.foreach(v => putValue(mins, name, v))
-          mx.foreach(v => putValue(maxs, name, v))
+          val render: Any => Any = timestamps.get(name) match {
+            case Some(f) => { case l: java.lang.Long => f(l.longValue()); case v => v }
+            case None => identity
+          }
+          mn.foreach(v => putValue(mins, name, render(v)))
+          mx.foreach(v => putValue(maxs, name, render(v)))
         }
         if (nc >= 0) nulls.put(name, nc)
       }
@@ -98,6 +115,17 @@ object DataSkipping {
     } catch {
       case _: Exception => None // stats are an optimization, never a failure
     } finally reader.close()
+  }
+
+  /** A raw INT64 timestamp of `t`'s unit as the protocol's JSON string,
+    * floored to the millisecond. */
+  private def timestampJson(
+      t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation): Long => String = {
+    val perMilli = if (t.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS) 1000L else 1L
+    val fmt = java.time.format.DateTimeFormatter.ofPattern(
+      if (t.isAdjustedToUTC) "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'"
+      else "yyyy-MM-dd'T'HH:mm:ss.SSS").withZone(java.time.ZoneOffset.UTC)
+    v => fmt.format(java.time.Instant.ofEpochMilli(Math.floorDiv(v, perMilli)))
   }
 
   private def genericValue(v: Any, isString: Boolean): Any = v match {
@@ -210,24 +238,34 @@ object DataSkipping {
 
   /** Rewrite a row predicate into a may-this-file-match predicate over a
     * parsed stats struct column `s`. Conservative: any unsupported
-    * subtree (or missing stat, via coalesce) becomes TRUE. `statCols` is
-    * the set of columns actually present in the stats schema — an
-    * attribute outside it must fall back to "might match", not throw on
-    * a nonexistent `s.minValues.<col>` reference. Partition columns
-    * participate via [[withPartitionValues]]' point ranges. Operates on
-    * the
-    * bridge's neutral view of the Column node tree (Spark 4's
-    * Connect-unified Column has no public `.expr`). */
-  def canMatch(condition: Column, statCols: Set[String]): Column =
-    translate(GraftColumnBridge.view(condition), statCols)
+    * subtree (or missing stat, via coalesce) becomes TRUE. Only columns
+    * of `schema` (the stats schema's columns) get ranges — an attribute
+    * outside it must fall back to "might match", not throw on a
+    * nonexistent `s.minValues.<col>` reference. Partition columns
+    * participate via [[withPartitionValues]]' point ranges.
+    *
+    * Timestamp maxima are widened by 1 ms: Delta writers (delta-spark
+    * among them, and [[statsJson]] here) record timestamp stats at
+    * millisecond precision, truncated, so a row at `….123456` sits in a
+    * file whose max reads `….123` — taken as exact, `ts >= '….1234'`
+    * would skip that file and lose the row. Minima are truncated
+    * downwards and stay safe as they are.
+    *
+    * Operates on the bridge's neutral view of the Column node tree
+    * (Spark 4's Connect-unified Column has no public `.expr`). */
+  def canMatch(condition: Column, schema: StructType): Column =
+    translate(GraftColumnBridge.view(condition),
+      schema.fields.map(f => f.name -> f.dataType).toMap)
 
-  private def translate(e: NodeView, statCols: Set[String]): Column = e match {
+  private type StatCols = Map[String, DataType]
+
+  private def translate(e: NodeView, statCols: StatCols): Column = e match {
     case FnView("and", Seq(l, r)) => translate(l, statCols) && translate(r, statCols)
     case FnView("or", Seq(l, r)) => translate(l, statCols) || translate(r, statCols)
     case FnView("=" | "==" | "equal_to", Seq(a, b)) =>
       (a, b) match {
-        case (AttrView(n), LitView(v)) if statCols(n) => rangeContains(n, v)
-        case (LitView(v), AttrView(n)) if statCols(n) => rangeContains(n, v)
+        case (AttrView(n), LitView(v)) if statCols.contains(n) => rangeContains(n, v, statCols)
+        case (LitView(v), AttrView(n)) if statCols.contains(n) => rangeContains(n, v, statCols)
         case _ => lit(true)
       }
     case FnView("<", Seq(a, b)) => cmpNode(a, b, strict = true, attrOnLeftUsesMin = true, statCols)
@@ -235,10 +273,10 @@ object DataSkipping {
     case FnView(">", Seq(a, b)) => cmpNode(a, b, strict = true, attrOnLeftUsesMin = false, statCols)
     case FnView(">=", Seq(a, b)) => cmpNode(a, b, strict = false, attrOnLeftUsesMin = false, statCols)
     case FnView("in", AttrView(n) +: vs)
-        if statCols(n) && vs.forall(_.isInstanceOf[LitView]) =>
-      vs.collect { case LitView(v) => rangeContains(n, v) }
+        if statCols.contains(n) && vs.forall(_.isInstanceOf[LitView]) =>
+      vs.collect { case LitView(v) => rangeContains(n, v, statCols) }
         .reduceOption(_ || _).getOrElse(lit(true))
-    case FnView("isnull", Seq(AttrView(n))) if statCols(n) =>
+    case FnView("isnull", Seq(AttrView(n))) if statCols.contains(n) =>
       safe(col(s"s.nullCount.`$n`") > 0)
     case _ => lit(true)
   }
@@ -246,17 +284,18 @@ object DataSkipping {
   /** attr OP lit (or lit OP attr, mirrored): `<`-family checks the file
     * minimum, `>`-family the maximum. */
   private def cmpNode(a: NodeView, b: NodeView,
-      strict: Boolean, attrOnLeftUsesMin: Boolean, statCols: Set[String]): Column =
+      strict: Boolean, attrOnLeftUsesMin: Boolean, statCols: StatCols): Column =
     (a, b) match {
-      case (AttrView(n), LitView(v)) if statCols(n) =>
-        bound(n, v, useMin = attrOnLeftUsesMin, strict)
-      case (LitView(v), AttrView(n)) if statCols(n) =>
-        bound(n, v, useMin = !attrOnLeftUsesMin, strict)
+      case (AttrView(n), LitView(v)) if statCols.contains(n) =>
+        bound(n, v, useMin = attrOnLeftUsesMin, strict, statCols)
+      case (LitView(v), AttrView(n)) if statCols.contains(n) =>
+        bound(n, v, useMin = !attrOnLeftUsesMin, strict, statCols)
       case _ => lit(true)
     }
 
-  private def bound(n: String, v: Any, useMin: Boolean, strict: Boolean): Column = {
-    val c = if (useMin) minCol(n) else maxCol(n)
+  private def bound(n: String, v: Any, useMin: Boolean, strict: Boolean,
+      statCols: StatCols): Column = {
+    val c = if (useMin) minCol(n) else maxCol(n, statCols)
     val l = litOf(v)
     safe(
       if (useMin) { if (strict) c < l else c <= l }
@@ -268,10 +307,19 @@ object DataSkipping {
       org.apache.spark.sql.catalyst.expressions.Literal(v))
 
   private def minCol(n: String): Column = col(s"s.minValues.`$n`")
-  private def maxCol(n: String): Column = col(s"s.maxValues.`$n`")
 
-  private def rangeContains(n: String, v: Any): Column =
-    safe(minCol(n) <= litOf(v) && maxCol(n) >= litOf(v))
+  /** The file maximum of `n`; timestamp maxima widened by 1 ms (see
+    * [[canMatch]]). */
+  private def maxCol(n: String, statCols: StatCols): Column = {
+    val c = col(s"s.maxValues.`$n`")
+    statCols(n) match {
+      case TimestampType | TimestampNTZType => c + lit(java.time.Duration.ofMillis(1))
+      case _ => c
+    }
+  }
+
+  private def rangeContains(n: String, v: Any, statCols: StatCols): Column =
+    safe(minCol(n) <= litOf(v) && maxCol(n, statCols) >= litOf(v))
 
   /** NULL stat (absent min/max) must mean "might match", not "skip". */
   private def safe(c: Column): Column = coalesce(c, lit(true))

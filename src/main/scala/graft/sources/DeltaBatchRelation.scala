@@ -28,6 +28,10 @@ import org.apache.spark.sql.types.StructType
   * like Delta's own DataFrame reads: a concurrent commit between
   * planning and execution cannot tear the row set, and the schema and
   * every scan come from that one replay — a read lists the log once.
+  * Planning launches no Spark job: skipping runs on the driver over a
+  * local relation, and the kept files' sizes and mtimes come from their
+  * `add` entries, not from the file system ([[DeltaFileIndex]]). A
+  * lookup's only job is the query itself.
   *
   * Reference surface: `delta_scan('<path>')` through DuckDB
   * (delta-unity-duckdb.js:330) — here the format string is the

@@ -138,9 +138,8 @@ object DeltaCdf {
     } else if (adds.nonEmpty) {
       // append-only commit: its added files ARE the inserted rows
       val snapV = DeltaLog.snapshot(spark, tablePath, Some(v))
-      Some(DeltaLog.scanFiles(spark, snapV, adds.toSeq.map { p =>
-        new Path(tablePath, java.net.URLDecoder.decode(p, "UTF-8")).toString
-      }).withColumn("_change_type", lit("insert"))
+      Some(DeltaLog.scanFiles(spark, snapV, snapV.liveEntries(adds.toSeq))
+        .withColumn("_change_type", lit("insert"))
         .withColumn("_commit_version", lit(v)))
     } else None // metadata-only or layout-only commit
   }

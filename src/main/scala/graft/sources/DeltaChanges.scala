@@ -24,8 +24,10 @@ object DeltaChanges {
 
   private val mapper = new ObjectMapper()
 
+  /** `addedFiles`: the range's data-changing `add` entries, in commit
+    * order, as the commits recorded them. */
   final case class Changes(fromVersionExclusive: Long, toVersion: Long,
-      addedFiles: Seq[String])
+      addedFiles: Seq[DeltaLog.AddEntry])
 
   /** (files, bytes) added by ONE commit — the metadata a streaming
     * source's `maxFilesPerTrigger` / `maxBytesPerTrigger` walk needs.
@@ -53,7 +55,7 @@ object DeltaChanges {
     (files, bytes)
   }
 
-  /** File paths added by commits in `(fromExclusive, toInclusive]`
+  /** Files added by commits in `(fromExclusive, toInclusive]`
     * (`toInclusive` defaults to the latest version — a streaming source
     * passes the batch's end offset so a commit landing mid-planning
     * stays out of the batch). */
@@ -64,7 +66,7 @@ object DeltaChanges {
     val latest = toInclusive.getOrElse(DeltaLog.latestVersion(spark, tablePath))
     val fs = DeltaLog.logDir(tablePath)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    val added = scala.collection.mutable.Buffer[String]()
+    val added = scala.collection.mutable.Buffer[DeltaLog.AddEntry]()
     ((fromExclusive + 1) to latest).foreach { v =>
       val commit = new org.apache.hadoop.fs.Path(
         DeltaLog.logDir(tablePath), f"$v%020d.json")
@@ -77,7 +79,7 @@ object DeltaChanges {
           s"commit $v of $tablePath no longer exists (log cleaned past " +
             "this consumer's offset) — full snapshot refresh required")
       } else {
-        val adds = scala.collection.mutable.Buffer[String]()
+        val adds = scala.collection.mutable.Buffer[DeltaLog.AddEntry]()
         var dataChangingRemove = false
         var dataChangingAdd = false
         DeltaLog.withLogLines(fs, commit)(_.foreach { line =>
@@ -86,7 +88,7 @@ object DeltaChanges {
           if (add != null) {
             val changes = !add.hasNonNull("dataChange") ||
               add.get("dataChange").asBoolean(true)
-            if (changes) { dataChangingAdd = true; adds += add.get("path").asText() }
+            if (changes) { dataChangingAdd = true; adds += DeltaLog.addEntryOf(add) }
           }
           if (rm != null && (!rm.hasNonNull("dataChange") ||
               rm.get("dataChange").asBoolean(true)))
@@ -113,10 +115,7 @@ object DeltaChanges {
         added ++= adds
       }
     }
-    Changes(fromExclusive, latest, added.toSeq.map { p =>
-      new org.apache.hadoop.fs.Path(tablePath,
-        java.net.URLDecoder.decode(p, "UTF-8")).toString
-    })
+    Changes(fromExclusive, latest, added.toSeq)
   }
 
   /** ROW-level change feed for one commit, derived from the
@@ -164,9 +163,7 @@ object DeltaChanges {
     // the diff is only right when the removed side applies the OLD
     // vector and the added side the new one.
     def readFiles(snapAt: DeltaLog.Snapshot, paths: Seq[String]): DataFrame =
-      DeltaLog.scanFiles(spark, snapAt,
-        paths.map(p => new org.apache.hadoop.fs.Path(tablePath,
-          java.net.URLDecoder.decode(p, "UTF-8")).toString))
+      DeltaLog.scanFiles(spark, snapAt, snapAt.liveEntries(paths))
     val prevSnap =
       if (removed.isEmpty) snap
       else DeltaLog.snapshot(spark, tablePath, Some(version - 1))
@@ -199,6 +196,6 @@ object DeltaChanges {
     val c = changedFiles(spark, tablePath, fromExclusive, ignoreChanges,
       ignoreDeletes, toInclusive = Some(snap.version))
     // mapping-aware read (physical names project back to logical)
-    (c.toVersion, DeltaLog.scanFiles(spark, snap, c.addedFiles))
+    (c.toVersion, DeltaLog.scanFiles(spark, snap, snap.resolve(c.addedFiles)))
   }
 }

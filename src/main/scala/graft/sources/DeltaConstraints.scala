@@ -92,9 +92,9 @@ object DeltaConstraints {
     // Staged files of a mapped table hold PHYSICAL names — read through
     // them and project back, or every logical-named CHECK would
     // validate a column of nulls.
-    val staged = DeltaLog.fromPhysical(
-      spark.read.schema(DeltaLog.physicalSchema(schema))
-        .option("basePath", tablePath).parquet(paths: _*), schema)
+    val staged = DeltaLog.fromPhysical(spark.baseRelationToDataFrame(
+      DeltaLog.fileRelation(spark, DeltaLog.physicalSchema(schema), tablePath,
+        adds)), schema)
     val aggs = cs.map { case (_, e) =>
       sum(when(coalesce(expr(e), lit(true)) === false, 1L).otherwise(0L))
     }

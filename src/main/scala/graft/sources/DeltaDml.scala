@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, not, when}
 
@@ -83,19 +82,6 @@ object DeltaDml {
       })
   }
 
-  /** Qualified scan URI (the `__file` provenance value) → the log's
-    * relative path, for every live file of `snap`. One copy of the
-    * session's Hadoop conf serves the whole map, not one copy per file. */
-  private def scanUriToRel(spark: SparkSession,
-      snap: DeltaLog.Snapshot): Map[String, String] = {
-    val hconf = spark.sessionState.newHadoopConf()
-    snap.files.map { a =>
-      val abs = new Path(snap.tablePath,
-        java.net.URLDecoder.decode(a.path, "UTF-8"))
-      abs.getFileSystem(hconf).makeQualified(abs).toString -> a.path
-    }.toMap
-  }
-
   /** `cdcOf`: builds the commit's change-file rows (table columns +
     * `_change_type`) from the hit-file frame; materialized only when the
     * table has [[DeltaCdf.Property]] enabled. */
@@ -110,19 +96,17 @@ object DeltaDml {
     val snap = snapHint.getOrElse(DeltaLog.snapshot(spark, tablePath))
     DeltaLog.checkWritable(snap)
 
-    val uriToRel = scanUriToRel(spark, snap)
-
     val hitUris =
       if (snap.files.isEmpty) Array.empty[String]
-      else DeltaLog.scanFilesWithMeta(spark, snap, snap.filePaths)
+      else DeltaLog.scanFilesWithMeta(spark, snap, snap.files)
         .filter(condition).select(col("__file"))
         .distinct().collect().map(_.getString(0)) // file names only: metadata-scale
     if (hitUris.isEmpty)
       return DmlResult(snap.version, 0, 0L)
-    val hitRel = hitUris.toSeq.map(u => uriToRel.getOrElse(u,
-      throw new IllegalStateException(s"scanned file not in snapshot: $u")))
+    val hits = DeltaLog.entriesOfUris(spark, snap, hitUris.toSeq)
+    val hitRel = hits.map(_.path)
 
-    val hitDf = DeltaLog.scanFiles(spark, snap, hitUris.toIndexedSeq)
+    val hitDf = DeltaLog.scanFiles(spark, snap, hits)
     val affected = hitDf.filter(condition).count()
     val rewritten = transform(hitDf)
     val adds = DeltaWrite.writeDataFiles(rewritten, tablePath,
@@ -182,9 +166,7 @@ object DeltaDml {
     // the insert anti-join reads the SAME snapshot the hit detection and
     // the commit use (see rewrite()): a second read could see a newer
     // version than the one the merge decides against
-    val target = DeltaLog.scanFiles(spark, snap, snap.filePaths)
-
-    val uriToRel = scanUriToRel(spark, snap)
+    val target = DeltaLog.scanFiles(spark, snap, snap.files)
 
     // Files containing at least one row a matched CLAUSE will act on
     // (file names only come back to the driver, never data). The gate
@@ -203,13 +185,13 @@ object DeltaDml {
     val hitUris =
       if ((matchedUpdate.isEmpty && matchedDelete.isEmpty) || snap.files.isEmpty)
         Array.empty[String]
-      else DeltaLog.scanFilesWithMeta(spark, snap, snap.filePaths)
+      else DeltaLog.scanFilesWithMeta(spark, snap, snap.files)
         .drop("__pos").alias("t")
         .join(source.alias("s"), condition && actGate)
         .select(col("t.__file")).distinct()
         .collect().map(_.getString(0))
-    val hitRel = hitUris.toSeq.map(u => uriToRel.getOrElse(u,
-      throw new IllegalStateException(s"scanned file not in snapshot: $u")))
+    val hits = DeltaLog.entriesOfUris(spark, snap, hitUris.toSeq)
+    val hitRel = hits.map(_.path)
 
     // Source rows matching no target row (whole table, not just hit files).
     val inserts =
@@ -233,7 +215,7 @@ object DeltaDml {
           // (__file, __pos) is the stable physical row identity — it
           // keys the ambiguity check deterministically and, on
           // deletion-vector tables, becomes the vectorized position.
-          val hit = DeltaLog.scanFilesWithMeta(spark, snap, hitUris.toIndexedSeq)
+          val hit = DeltaLog.scanFilesWithMeta(spark, snap, hits)
           val marked = source.withColumn("__matched", lit(true))
           val joined = hit.alias("t").join(marked.alias("s"), condition, "left")
           joined.persist()

@@ -120,17 +120,8 @@ object DeltaDv {
       .collect().map(_.getString(0)) // metadata-scale
     if (hitFiles.isEmpty) return None
 
-    val hconf = spark.sessionState.newHadoopConf()
-    def canon(p: String): String = {
-      val hp = new Path(p)
-      hp.getFileSystem(hconf).makeQualified(hp).toString
-    }
-    val entryByCanon: Map[String, DeltaLog.AddEntry] = snap.files.map { a =>
-      canon(new Path(tablePath,
-        java.net.URLDecoder.decode(a.path, "UTF-8")).toString) -> a
-    }.toMap
-    val hitEntries = hitFiles.toSeq.map(f => f -> entryByCanon.getOrElse(f,
-      throw new IllegalStateException(s"scanned file not in snapshot: $f")))
+    val hitEntries = hitFiles.toSeq.zip(
+      DeltaLog.entriesOfUris(spark, snap, hitFiles.toSeq))
 
     // New positions ∪ the hit files' existing vectors → each descriptor
     // stays the file's COMPLETE deletion set. The bitmaps SERIALIZE ON
@@ -197,7 +188,7 @@ object DeltaDv {
     DeltaLog.checkWritable(snap)
     if (snap.files.isEmpty) return DmlResult(snap.version, 0, 0L)
 
-    val withMeta = DeltaLog.scanFilesWithMeta(spark, snap, snap.filePaths)
+    val withMeta = DeltaLog.scanFilesWithMeta(spark, snap, snap.files)
     // Already-vectored rows are filtered by the scan, so `matched` is
     // exactly the NEWLY deleted rows.
     val matched = withMeta.filter(condition)
@@ -230,7 +221,7 @@ object DeltaDv {
     DeltaLog.checkWritable(snap)
     if (snap.files.isEmpty) return DmlResult(snap.version, 0, 0L)
 
-    val withMeta = DeltaLog.scanFilesWithMeta(spark, snap, snap.filePaths)
+    val withMeta = DeltaLog.scanFilesWithMeta(spark, snap, snap.files)
     val matched = withMeta.filter(condition)
     vectorize(spark, snap, tablePath, matched) match {
       case None => DmlResult(snap.version, 0, 0L)

@@ -4,6 +4,7 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
@@ -21,9 +22,12 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * through DuckDB's `delta_scan`
   * (delta-unity-duckdb.js:330,425,496) — re-expressed directly on
   * Spark: replay the log (driver-side METADATA work, bounded by log
-  * size, exactly how any Delta client bootstraps), then hand the
-  * surviving parquet file list to the distributed scan. Filters and
-  * column pruning push into that scan as with any parquet read.
+  * size, exactly how any Delta client bootstraps), then plan the
+  * distributed parquet scan from the surviving `add` entries — their
+  * sizes and mtimes stand in for a file listing ([[DeltaFileIndex]]), so
+  * no file-system listing or Spark job runs before the query does.
+  * Filters and column pruning push into that scan as with any parquet
+  * read.
   *
   * Replay is split into plan (one listing → bootstrap checkpoint +
   * ordered replay files), apply (checkpoint and files folded into a
@@ -63,7 +67,10 @@ object DeltaLog {
   }
 
   /** One live data file in a snapshot. `path` is as recorded in the log
-    * (relative, percent-encoded per protocol); `stats` is the raw
+    * (relative, percent-encoded per protocol); `size` and
+    * `modificationTime` (epoch ms) are the file's length and mtime as the
+    * writer recorded them — scans plan splits from them without asking
+    * the file system ([[DeltaFileIndex]]); `stats` is the raw
     * `add.stats` JSON when the writer recorded one (see DataSkipping);
     * `dv` is the file's deletion vector, if any; `baseRowId` /
     * `defaultRowCommitVersion` are the row-tracking fields (fresh row id
@@ -71,7 +78,8 @@ object DeltaLog {
   final case class AddEntry(path: String, size: Long,
       stats: Option[String] = None, dv: Option[DvDescriptor] = None,
       baseRowId: Option[Long] = None,
-      defaultRowCommitVersion: Option[Long] = None)
+      defaultRowCommitVersion: Option[Long] = None,
+      modificationTime: Long = 0L)
 
   final case class Snapshot(
       version: Long,
@@ -105,6 +113,18 @@ object DeltaLog {
       val decoded = java.net.URLDecoder.decode(a.path, "UTF-8")
       new Path(tablePath, decoded).toString
     }
+    /** Live entries by their log path. */
+    lazy val fileByPath: Map[String, AddEntry] = files.map(a => a.path -> a).toMap
+    /** The live entries at log `paths` (as `add`/`remove` actions record
+      * them); a path that is not live in this snapshot is an error. */
+    def liveEntries(paths: Seq[String]): Seq[AddEntry] = paths.map(p =>
+      fileByPath.getOrElse(p, throw new IllegalStateException(
+        s"$p is not live in version $version of $tablePath")))
+    /** Each entry as this snapshot holds it (deletion vector included)
+      * when its path is live here, else as given — how files added by
+      * earlier commits are read at this version. */
+    def resolve(entries: Seq[AddEntry]): Seq[AddEntry] =
+      entries.map(e => fileByPath.getOrElse(e.path, e))
     /** Column-mapping mode ("none" unless the table opted in). */
     def columnMappingMode: String =
       configuration.getOrElse("delta.columnMapping.mode", "none")
@@ -128,42 +148,94 @@ object DeltaLog {
     segs.reverse.dropWhile(_.contains("=")).reverse.mkString("/")
   }
 
-  /** Scan explicit data files of a snapshot, column-mapping aware: under
-    * `name` mode the parquet holds PHYSICAL column names (from each
-    * field's `delta.columnMapping.physicalName` metadata) and the result
-    * is projected back to logical names; other mapped modes are rejected
+  /** The qualified path of a file of `tablePath` — the path its scan
+    * plans. */
+  private def qualifiedPath(hconf: Configuration, tablePath: String,
+      a: AddEntry): Path = {
+    val p = new Path(tablePath, java.net.URLDecoder.decode(a.path, "UTF-8"))
+    p.getFileSystem(hconf).makeQualified(p)
+  }
+
+  /** The value of the scan's `__file` provenance column for a file:
+    * `_metadata.file_path` is Spark's URL-encoded form of the path (a
+    * space reads `%20`), not `Path.toString`, so every map keyed by
+    * scanned files keys on this. */
+  private[sources] def scannedUri(hconf: Configuration, tablePath: String,
+      a: AddEntry): String = org.apache.spark.paths.SparkPath
+    .fromPathString(qualifiedPath(hconf, tablePath, a).toString).urlEncoded
+
+  /** The entries of `snap` that scanned `__file` URIs came from — how
+    * DML maps hit files back to the log. A URI the snapshot does not hold
+    * is an error. */
+  private[sources] def entriesOfUris(spark: SparkSession, snap: Snapshot,
+      uris: Seq[String]): Seq[AddEntry] = {
+    val hconf = spark.sessionState.newHadoopConf()
+    val byUri = snap.files.map(a =>
+      scannedUri(hconf, snap.tablePath, a) -> a).toMap
+    uris.map(u => byUri.getOrElse(u,
+      throw new IllegalStateException(s"scanned file not in snapshot: $u")))
+  }
+
+  /** The log-planned parquet relation over `files` of `tablePath` read
+    * with `schema` as the files hold it — no column-mapping projection,
+    * no deletion vectors: for staged adds and the streaming source's
+    * plain batches. */
+  private[graft] def fileRelation(spark: SparkSession, schema: StructType,
+      tablePath: String, files: Seq[AddEntry])
+      : org.apache.spark.sql.execution.datasources.HadoopFsRelation = {
+    val hconf = spark.sessionState.newHadoopConf()
+    DeltaFileIndex.relation(spark, schema, tablePath,
+      files.map(fileStatus(hconf, tablePath, _)))
+  }
+
+  /** A file's status as the log records it: qualified path, `size`,
+    * `modificationTime`. */
+  private def fileStatus(hconf: Configuration, tablePath: String,
+      a: AddEntry): FileStatus =
+    new FileStatus(a.size, false, 0, 0L, a.modificationTime,
+      qualifiedPath(hconf, tablePath, a))
+
+  /** Scan log entries of a snapshot, column-mapping aware: under `name`
+    * mode the parquet holds PHYSICAL column names (from each field's
+    * `delta.columnMapping.physicalName` metadata) and the result is
+    * projected back to logical names; other mapped modes are rejected
     * rather than silently read as all-NULL columns. Every path that
     * reads a mapped table's files (read / readWhere / the change feeds /
-    * DML hit reads) must go through here. Files may live OUTSIDE the
-    * table directory (shallow clones) — they are read in per-origin
-    * groups, each with its own basePath. */
-  /** [[scanFiles]] for callers outside this package (the streaming
-    * source): explicit files of `snap` read DV- and mapping-aware. */
-  private[graft] def readFiles(spark: SparkSession, snap: Snapshot,
-      paths: Seq[String]): DataFrame = scanFiles(spark, snap, paths)
-
-  private[sources] def scanFiles(spark: SparkSession, snap: Snapshot,
-      paths: Seq[String]): DataFrame =
-    if (paths.isEmpty)
+    * DML hit reads) must go through here. Callers pass log entries, never
+    * bare paths: sizes and mtimes come from the log (see
+    * [[scanFilesWithMeta]]). Files may live OUTSIDE the table directory
+    * (shallow clones) — they are read in per-origin groups, each with its
+    * own basePath. */
+  private[graft] def scanFiles(spark: SparkSession, snap: Snapshot,
+      files: Seq[AddEntry]): DataFrame =
+    if (files.isEmpty)
       spark.createDataFrame(
         java.util.Collections.emptyList[Row](), snap.schema)
     else {
       val ordered = snap.schema.fieldNames.toIndexedSeq
         .map(n => org.apache.spark.sql.functions.col(s"`$n`"))
-      scanFilesWithMeta(spark, snap, paths).select(ordered: _*)
+      scanFilesWithMeta(spark, snap, files).select(ordered: _*)
     }
 
   /** [[scanFiles]] plus the physical provenance columns `__file`
     * (qualified file URI) and `__pos` (row index within the file) —
-    * what DML hit detection and deletion-vector writes key on. */
+    * what DML hit detection and deletion-vector writes key on.
+    *
+    * Each file's planned size and mtime are its entry's `size` and
+    * `modificationTime`: the file index answers from the log
+    * ([[DeltaFileIndex]]), so building the frame launches no Spark job
+    * and makes no per-file file-system call; the reading task checks the
+    * real length against the log's and fails on a mismatch it cannot
+    * cover. A deletion vector is the entry's own `dv`. */
   private[sources] def scanFilesWithMeta(spark: SparkSession, snap: Snapshot,
-      paths: Seq[String]): DataFrame = {
+      files: Seq[AddEntry]): DataFrame = {
     val mode = snap.columnMappingMode
     if (mode != "none" && mode != "name" && mode != "id")
       throw new UnsupportedOperationException(
         s"column mapping mode '$mode' not supported (none/name/id)")
-    require(paths.nonEmpty, "scanFilesWithMeta needs at least one file")
+    require(files.nonEmpty, "scanFilesWithMeta needs at least one file")
     import org.apache.spark.sql.functions.col
+    val hconf = spark.sessionState.newHadoopConf()
     // Hive partition discovery may reorder partition columns to the end
     // of a group's output — every group is pinned to the snapshot's
     // column order (plus the provenance columns, taken from the scan's
@@ -171,7 +243,9 @@ object DeltaLog {
     // consumers see ONE deterministic schema regardless of file layout.
     val metaCols = Seq(col("_metadata.file_path").as("__file"),
       col("_metadata.row_index").as("__pos"))
-    def readGroup(base: String, ps: Seq[String]): DataFrame =
+    def readGroup(base: String, group: Seq[FileStatus]): DataFrame = {
+      def scan(schema: StructType): DataFrame = spark.baseRelationToDataFrame(
+        DeltaFileIndex.relation(spark, schema, base, group))
       if (mode == "name" || mode == "id") {
         // name mode: parquet columns match by PHYSICAL name. id mode
         // (icebergCompat writers): they match by parquet FIELD ID —
@@ -202,19 +276,18 @@ object DeltaLog {
         // which this engine attaches exactly for id-mode tables
         if (mode == "id")
           spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-        val raw = spark.read.schema(physical)
-          .option("basePath", base).parquet(ps: _*)
-        raw.select(physical.fields.zip(snap.schema.fields).map {
+        scan(physical).select(physical.fields.zip(snap.schema.fields).map {
           case (p, l) => col(s"`${p.name}`").as(l.name)
         }.toIndexedSeq ++ metaCols: _*)
       } else {
-        spark.read.schema(snap.schema)
-          .option("basePath", base).parquet(ps: _*)
+        scan(snap.schema)
           .select(snap.schema.fieldNames.toIndexedSeq.map(n => col(s"`$n`")) ++
             metaCols: _*)
       }
-    def readAll(ps: Seq[String]): DataFrame =
-      ps.groupBy(fileTableRoot).toSeq.sortBy(_._1)
+    }
+    def readAll(es: Seq[AddEntry]): DataFrame =
+      es.map(fileStatus(hconf, snap.tablePath, _))
+        .groupBy(st => fileTableRoot(st.getPath.toString)).toSeq.sortBy(_._1)
         .map { case (root, group) => readGroup(root, group) }
         .reduce(_ unionByName _)
 
@@ -223,24 +296,8 @@ object DeltaLog {
     // rows (file, pos) — fully distributed, positions never transit the
     // driver, and the join probe side is bounded by DELETED rows, not
     // the table.
-    // Callers hand over either plain absolute paths (snapshot file
-    // lists) or qualified URIs (provenance-column round trips) —
-    // canonicalize both sides before matching.
-    val hconf = spark.sessionState.newHadoopConf()
-    def canon(p: String): String = {
-      val hp = new Path(p)
-      hp.getFileSystem(hconf).makeQualified(hp).toString
-    }
-    val dvByCanon: Map[String, DvDescriptor] = snap.files.flatMap { a =>
-      a.dv.map { d =>
-        val abs = new Path(snap.tablePath,
-          java.net.URLDecoder.decode(a.path, "UTF-8")).toString
-        canon(abs) -> (if (d.inline) d
-          else d.copy(path = new Path(snap.tablePath, d.path).toString))
-      }
-    }.toMap
-    val (dvPaths, plainPaths) = paths.partition(p => dvByCanon.contains(canon(p)))
-    if (dvPaths.isEmpty) readAll(plainPaths)
+    val (dvFiles, plainFiles) = files.partition(_.dv.isDefined)
+    if (dvFiles.isEmpty) readAll(plainFiles)
     else {
       // Each (data file, descriptor) ref parses ITS vector out of the
       // roaring DV file in the executor task — positions never transit
@@ -249,9 +306,10 @@ object DeltaLog {
       // payload; no file I/O. File reads use the SESSION's Hadoop conf
       // (broadcast — spark.hadoop.* credentials/endpoints must reach
       // executor-side DV opens on real object stores).
-      val refs: Seq[(String, String, String, Long, Long)] = dvPaths.map { p =>
-        val d = dvByCanon(canon(p))
-        (canon(p), d.storageType, if (d.inline) d.raw else d.path,
+      val refs: Seq[(String, String, String, Long, Long)] = dvFiles.map { a =>
+        val d = a.dv.get
+        (scannedUri(hconf, snap.tablePath, a), d.storageType,
+          if (d.inline) d.raw else new Path(snap.tablePath, d.path).toString,
           d.offset, d.sizeInBytes)
       }
       val bconf = spark.sparkContext.broadcast(
@@ -273,12 +331,12 @@ object DeltaLog {
             }
           positions.map(file -> _)
         }.toDF("__dv_file", "__dv_pos")
-      val withMeta = readAll(dvPaths)
+      val withMeta = readAll(dvFiles)
       val filtered = withMeta.join(dvRows,
           withMeta("__file") === dvRows("__dv_file") &&
             withMeta("__pos") === dvRows("__dv_pos"), "left_anti")
-      if (plainPaths.isEmpty) filtered
-      else readAll(plainPaths).unionByName(filtered)
+      if (plainFiles.isEmpty) filtered
+      else readAll(plainFiles).unionByName(filtered)
     }
   }
 
@@ -538,6 +596,32 @@ object DeltaLog {
     ReplayPlan(target, ckpt, replay.result())
   }
 
+  /** The [[AddEntry]] of one JSON `add` action (commit, compacted-log
+    * or V2 JSON-manifest form). */
+  private[sources] def addEntryOf(add: JsonNode): AddEntry = {
+    val stats =
+      if (add.hasNonNull("stats")) Some(add.get("stats").asText())
+      else None
+    val dv =
+      if (add.hasNonNull("deletionVector")) {
+        val d = add.get("deletionVector")
+        val st = d.get("storageType").asText()
+        checkDvStorage(st)
+        Some(DvDescriptor(
+          dvPathOf(st, d.get("pathOrInlineDv").asText()),
+          d.get("cardinality").asLong(),
+          if (d.hasNonNull("offset")) d.get("offset").asLong() else 1L,
+          if (d.hasNonNull("sizeInBytes")) d.get("sizeInBytes").asLong()
+          else 0L,
+          st, d.get("pathOrInlineDv").asText()))
+      } else None
+    def optLong(n: String): Option[Long] =
+      if (add.hasNonNull(n)) Some(add.get(n).asLong()) else None
+    AddEntry(add.get("path").asText(), add.get("size").asLong(), stats, dv,
+      optLong("baseRowId"), optLong("defaultRowCommitVersion"),
+      optLong("modificationTime").getOrElse(0L))
+  }
+
   /** The table state a replay produces, frozen: what a [[Snapshot]] is
     * built from, and what the snapshot cache holds. `files` keeps the
     * live map's insertion order, which is the snapshot's file order. */
@@ -586,27 +670,8 @@ object DeltaLog {
       val add = node.get("add"); val rm = node.get("remove")
       val md = node.get("metaData"); val proto = node.get("protocol")
       if (add != null) {
-        val p = add.get("path").asText()
-        val stats =
-          if (add.hasNonNull("stats")) Some(add.get("stats").asText())
-          else None
-        val dv =
-          if (add.hasNonNull("deletionVector")) {
-            val d = add.get("deletionVector")
-            val st = d.get("storageType").asText()
-            checkDvStorage(st)
-            Some(DvDescriptor(
-              dvPathOf(st, d.get("pathOrInlineDv").asText()),
-              d.get("cardinality").asLong(),
-              if (d.hasNonNull("offset")) d.get("offset").asLong() else 1L,
-              if (d.hasNonNull("sizeInBytes")) d.get("sizeInBytes").asLong()
-              else 0L,
-              st, d.get("pathOrInlineDv").asText()))
-          } else None
-        def optLong(n: String): Option[Long] =
-          if (add.hasNonNull(n)) Some(add.get(n).asLong()) else None
-        live(p) = AddEntry(p, add.get("size").asLong(), stats, dv,
-          optLong("baseRowId"), optLong("defaultRowCommitVersion"))
+        val a = addEntryOf(add)
+        live(a.path) = a
       }
       if (rm != null && !bootstrapCtx) live.remove(rm.get("path").asText())
       if (md != null) {
@@ -671,7 +736,8 @@ object DeltaLog {
           Some(a.getAs[Long](n))
         else None
       live(path) = AddEntry(path, a.getAs[Long]("size"), stats, dv,
-        optLong("baseRowId"), optLong("defaultRowCommitVersion"))
+        optLong("baseRowId"), optLong("defaultRowCommitVersion"),
+        optLong("modificationTime").getOrElse(0L))
     }
   }
 
@@ -881,15 +947,19 @@ object DeltaLog {
 
   /** Read a Delta table as a DataFrame (optionally time-traveled). The
     * scan is a plain distributed parquet read over the snapshot's live
-    * files — predicate pushdown / column pruning apply unchanged.
+    * files — predicate pushdown / column pruning apply unchanged. The
+    * file index is built from the snapshot's `add` entries (sizes and
+    * mtimes from the log, see [[scanFilesWithMeta]]): building the frame
+    * lists the log once and launches no Spark job, and its `schema` is
+    * the snapshot's.
     *
     * Column mapping (`delta.columnMapping.mode = name`, reader version
     * 2): parquet files store PHYSICAL column names recorded in each
     * schema field's `delta.columnMapping.physicalName` metadata; the
     * scan reads the physical schema and projects back to logical names
     * (a zero-cost rename in the plan — pruning/pushdown still operate
-    * on the physical scan). `id` mode (parquet field-id matching) is
-    * rejected explicitly rather than misread. */
+    * on the physical scan). `id` mode resolves columns by parquet field
+    * id; any other mode is rejected rather than misread. */
   def read(spark: SparkSession, tablePath: String,
       versionAsOf: Option[Long] = None,
       timestampAsOf: Option[java.sql.Timestamp] = None): DataFrame = {
@@ -898,7 +968,7 @@ object DeltaLog {
     val asOf = versionAsOf.orElse(
       timestampAsOf.map(versionAt(spark, tablePath, _)))
     val snap = snapshot(spark, tablePath, asOf)
-    scanFiles(spark, snap, snap.filePaths)
+    scanFiles(spark, snap, snap.files)
   }
 
   /** Read with file-level data skipping: files whose `add.stats` range
@@ -907,7 +977,9 @@ object DeltaLog {
     * optimization, not a correctness dependency — files without stats
     * always scan). At 100 TB this is the difference between opening the
     * three files whose [min,max] straddle a point predicate and opening
-    * the table. */
+    * the table. Skipping runs on the driver over a local relation of the
+    * stats, and the kept files scan as in [[read]]: building the frame
+    * launches no Spark job. */
   def readWhere(spark: SparkSession, tablePath: String, condition: Column,
       versionAsOf: Option[Long] = None): DataFrame =
     readWhere(spark, snapshot(spark, tablePath, versionAsOf), condition)
@@ -926,27 +998,25 @@ object DeltaLog {
       if (statted.isEmpty) snap.files
       else {
         import org.apache.spark.sql.functions.{col => c, from_json}
+        import org.apache.spark.sql.types.StringType
+        // a LOCAL relation: the optimizer folds the filter into it
+        // (ConvertToLocalRelation), so the collect launches no job
         val statsDf = spark.createDataFrame(
-          spark.sparkContext.parallelize(
-            statted.map { case (p, s) => org.apache.spark.sql.Row(p, s) }, 1),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("path",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("stats",
-              org.apache.spark.sql.types.StringType))))
+          statted.map { case (p, s) => Row(p, s) }.asJava,
+          StructType(Seq(StructField("path", StringType),
+            StructField("stats", StringType))))
         val withStats = statted.map(_._1).toSet
         val keepPaths = statsDf
           .withColumn("s", from_json(c("stats"),
             DataSkipping.statsSchema(snap.schema)))
-          .where(DataSkipping.canMatch(condition, snap.schema.fieldNames.toSet))
+          .where(DataSkipping.canMatch(condition, snap.schema))
           .select("path").collect().map(_.getString(0)).toSet
         snap.files.filter(a => !withStats(a.path) || keepPaths(a.path))
       }
-    val pruned = snap.copy(files = kept)
     // scanFiles keeps mapped tables honest here too: stats recorded
     // under physical names simply fail to parse against the logical
     // stats schema → safe() keeps the file (conservative, never wrong).
-    scanFiles(spark, pruned, pruned.filePaths).where(condition)
+    scanFiles(spark, snap, kept).where(condition)
   }
 
   /** Unmapped and NAME-mapped tables are writable (writers route frames

@@ -82,7 +82,7 @@ object DeltaMaintenance {
     require(fs.exists(table), s"no such directory: $tablePath")
     if (fs.exists(DeltaLog.logDir(tablePath)))
       throw new IllegalStateException(s"already a Delta table: $tablePath")
-    val found = scala.collection.mutable.Buffer[(String, Long)]()
+    val found = scala.collection.mutable.Buffer[(String, Long, Long)]()
     def walk(p: Path, rel: String): Unit =
       fs.listStatus(p).foreach { st =>
         val name = st.getPath.getName
@@ -91,7 +91,7 @@ object DeltaMaintenance {
             walk(st.getPath, s"$rel$name/")
         } else if (name.endsWith(".parquet") &&
             !name.startsWith(".") && !name.startsWith("_"))
-          found += ((s"$rel$name", st.getLen))
+          found += ((s"$rel$name", st.getLen, st.getModificationTime))
       }
     walk(table, "")
     require(found.nonEmpty, s"no parquet files to convert under $tablePath")
@@ -106,7 +106,7 @@ object DeltaMaintenance {
         java.net.URLDecoder.decode(kv(0), "UTF-8")
       }
     val partCols = partColsOf(found.head._1)
-    found.foreach { case (rel, _) =>
+    found.foreach { case (rel, _, _) =>
       require(partColsOf(rel) == partCols,
         s"inconsistent partition layout: $rel has ${partColsOf(rel)}, " +
           s"expected $partCols")
@@ -122,9 +122,10 @@ object DeltaMaintenance {
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration._
     val adds = Await.result(
-      Future.sequence(found.toSeq.sortBy(_._1).map { case (rel, len) =>
+      Future.sequence(found.toSeq.sortBy(_._1).map { case (rel, len, mtime) =>
         Future(DeltaLog.AddEntry(rel, len,
-          DataSkipping.statsJson(conf, new Path(table, rel))))
+          DataSkipping.statsJson(conf, new Path(table, rel)),
+          modificationTime = mtime))
       }), 10.minutes)
     val actions = DeltaWrite.protocolAction() +:
       DeltaWrite.metaDataAction(schema, partCols) +:
@@ -337,14 +338,11 @@ object DeltaMaintenance {
     DeltaLog.checkWritable(snap) // compaction rewrites data files too
     val small = snap.files.filter(_.size < smallFileBytes)
     if (small.size < 2) return (0, snap.version)
-    val uris = small.map { a =>
-      new Path(tablePath, java.net.URLDecoder.decode(a.path, "UTF-8")).toString
-    }
     // One partition per ~targetSize of input: the rewrite is distributed,
     // only file metadata moves through the driver.
     val totalBytes = small.map(_.size).sum
     val parts = math.max(1, (totalBytes / smallFileBytes).toInt)
-    val df = DeltaLog.scanFiles(spark, snap, uris)
+    val df = DeltaLog.scanFiles(spark, snap, small)
     val compacted =
       if (snap.partitionColumns.nonEmpty) df.repartition(parts,
         snap.partitionColumns.map(org.apache.spark.sql.functions.col): _*)

@@ -4,7 +4,7 @@ import scala.collection.mutable
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{JsonNodeFactory, ObjectNode}
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Minimal Delta Lake commit writer (public protocol, see [[DeltaLog]]):
@@ -374,7 +374,7 @@ object DeltaWrite {
     // readers bootstrap partition columns from the add entry, not from
     // the hive path — an empty map would misread partitioned tables.
     val addRows = snap.files.map(a =>
-      Row(Row(a.path, a.size, false, 0L, a.stats.orNull,
+      Row(Row(a.path, a.size, false, a.modificationTime, a.stats.orNull,
         partitionValuesMap(a.path),
         a.dv.map(d => Row(d.storageType, d.rawOrPath, if (d.inline) null else d.offset, d.sizeInBytes, d.cardinality)).orNull,
         a.baseRowId.map(Long.box).orNull,
@@ -620,7 +620,7 @@ object DeltaWrite {
     }
     // unchanged buckets are referenced; changed ones land (fully
     // written) BEFORE the manifest that names them
-    val sidecarRefs: Seq[(String, Long)] = buckets.map { bucket =>
+    val sidecarRefs: Seq[(String, Long, Long)] = buckets.map { bucket =>
       // key on the SERIALIZED descriptor fields (rawOrPath + the
       // offset form the sidecar row stores) — keying on the resolved
       // d.path/d.offset never matches what reads back from a prior
@@ -634,7 +634,7 @@ object DeltaWrite {
         case Some((name, sz)) => (name, sz)
         case None =>
           val rows = bucket.map(a =>
-            Row(Row(a.path, a.size, false, 0L, a.stats.orNull,
+            Row(Row(a.path, a.size, false, a.modificationTime, a.stats.orNull,
               partitionValuesMap(a.path),
               a.dv.map(d => Row(d.storageType, d.rawOrPath, if (d.inline) null else d.offset, d.sizeInBytes, d.cardinality)).orNull,
               a.baseRowId.map(Long.box).orNull,
@@ -643,9 +643,11 @@ object DeltaWrite {
           val size = writeOne(new Path(scDir, name), rows, sidecarSchema)
           (name, size)
       }
+    }.map { case (name, sz) =>
+      (name, sz, f.getFileStatus(new Path(scDir, name)).getModificationTime)
     }
-    val sidecarRows = sidecarRefs.map { case (n, sz) =>
-      Row(null, null, null, null, Row(n, sz, 0L), null)
+    val sidecarRows = sidecarRefs.map { case (n, sz, mtime) =>
+      Row(null, null, null, null, Row(n, sz, mtime), null)
     }
     val proto = snap.protocol
     val manifest: Seq[Row] =
@@ -702,10 +704,10 @@ object DeltaWrite {
         val d = n.putObject("domainMetadata")
         d.put("domain", dom); d.put("configuration", c); d.put("removed", false); n
       }
-      val scNs = sidecarRefs.map { case (name, sz) =>
+      val scNs = sidecarRefs.map { case (name, sz, mtime) =>
         val n = mapper.createObjectNode()
         val s = n.putObject("sidecar")
-        s.put("path", name); s.put("sizeInBytes", sz); s.put("modificationTime", 0L); n
+        s.put("path", name); s.put("sizeInBytes", sz); s.put("modificationTime", mtime); n
       }
       val target = new Path(dir,
         f"${snap.version}%020d.checkpoint.${java.util.UUID.randomUUID()}.json")
@@ -756,7 +758,7 @@ object DeltaWrite {
     (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
       .parquet(staging.toString)
 
-    val moved = mutable.Buffer[(String, Path, Long)]()
+    val moved = mutable.Buffer[(String, Path, FileStatus)]()
     def walk(p: Path, rel: String): Unit =
       f.listStatus(p).foreach { st =>
         val name = st.getPath.getName
@@ -767,7 +769,9 @@ object DeltaWrite {
           f.mkdirs(target.getParent)
           if (!f.rename(st.getPath, target))
             throw new IllegalStateException(s"could not move data file to $target")
-          moved += ((relPath, target, st.getLen))
+          // the mtime read back after the move: a rename that copies
+          // (object stores) gives the file a new one
+          moved += ((relPath, target, f.getFileStatus(target)))
         }
       }
     walk(staging, "")
@@ -781,8 +785,10 @@ object DeltaWrite {
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration._
     Await.result(
-      Future.sequence(moved.toSeq.map { case (relPath, target, len) =>
-        Future(DeltaLog.AddEntry(relPath, len, DataSkipping.statsJson(conf, target)))
+      Future.sequence(moved.toSeq.map { case (relPath, target, st) =>
+        Future(DeltaLog.AddEntry(relPath, st.getLen,
+          DataSkipping.statsJson(conf, target),
+          modificationTime = st.getModificationTime))
       }), 10.minutes)
   }
 
@@ -794,7 +800,7 @@ object DeltaWrite {
     val n = mapper.createObjectNode()
     val add = mapper.createObjectNode()
       .put("path", a.path).put("size", a.size)
-      .put("modificationTime", 0L).put("dataChange", dataChange)
+      .put("modificationTime", a.modificationTime).put("dataChange", dataChange)
     a.stats.foreach(add.put("stats", _))
     a.baseRowId.foreach(add.put("baseRowId", _))
     a.defaultRowCommitVersion.foreach(add.put("defaultRowCommitVersion", _))

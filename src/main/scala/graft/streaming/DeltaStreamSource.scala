@@ -120,15 +120,15 @@ class DeltaStreamSource(
       // no longer exist; after OPTIMIZE+VACUUM replay would reference
       // vacuumed files; and under ignoreChanges replay would re-emit
       // rows that were deleted before the stream started.
-      case None => snapTo.filePaths
+      case None => snapTo.files
       case Some(s) =>
         val from = versionOf(s)
         if (to <= from) Nil
-        else DeltaChanges.changedFiles(spark, tablePath, from,
-          ignoreChanges, ignoreDeletes, toInclusive = Some(to)).addedFiles
+        else snapTo.resolve(DeltaChanges.changedFiles(spark, tablePath, from,
+          ignoreChanges, ignoreDeletes, toInclusive = Some(to)).addedFiles)
     }
     if (files.isEmpty)
-      GraftStreamBridge.streamingParquetBatch(spark, schema, tablePath, Nil)
+      GraftStreamBridge.streamingFileBatch(spark, schema, None)
     // DV or column-mapped tables must read through the snapshot-aware
     // scan — a raw parquet read would RESURRECT vectored-out rows in
     // the bootstrap batch and resolve a mapped table's physical columns
@@ -136,9 +136,10 @@ class DeltaStreamSource(
     // relation (a scan boundary downstream filters can enter).
     else if (snapTo.columnMappingMode == "none" &&
         snapTo.files.forall(_.dv.isEmpty))
-      GraftStreamBridge.streamingParquetBatch(spark, schema, tablePath, files)
+      GraftStreamBridge.streamingFileBatch(spark, schema,
+        Some(DeltaLog.fileRelation(spark, schema, tablePath, files)))
     else GraftStreamBridge.streamingFromBatch(
-      DeltaLog.readFiles(spark, snapTo, files)
+      DeltaLog.scanFiles(spark, snapTo, files)
         .select(schema.fieldNames.toIndexedSeq.map(
           org.apache.spark.sql.functions.col): _*))
   }

@@ -1,6 +1,7 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.execution.datasources.{DataSource, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.sources.BaseRelation
 import org.apache.spark.sql.types.StructType
 
 /** Bridge to the `private[sql]` pieces a V1 streaming Source needs (same
@@ -38,26 +39,19 @@ object GraftStreamBridge {
       isStreaming = true)
   }
 
-  /** A batch DataFrame over explicit parquet files, flagged streaming.
-    * `basePath` keeps hive-style partition columns resolvable when the
-    * file list is a subset of the table tree. Empty file list → empty
-    * streaming batch with the right schema. */
-  def streamingParquetBatch(spark: SparkSession, schema: StructType,
-      basePath: String, files: Seq[String]): DataFrame = {
+  /** A batch DataFrame over a file relation (the source's log-planned
+    * parquet files), flagged streaming. None → empty streaming batch
+    * with the right schema. */
+  def streamingFileBatch(spark: SparkSession, schema: StructType,
+      relation: Option[BaseRelation]): DataFrame = {
     val cs = spark.asInstanceOf[classic.SparkSession]
-    if (files.isEmpty) {
-      cs.internalCreateDataFrame(
-        cs.sparkContext.emptyRDD[org.apache.spark.sql.catalyst.InternalRow],
-        schema, isStreaming = true)
-    } else {
-      val relation = DataSource(
-        sparkSession = cs,
-        className = "parquet",
-        paths = files,
-        userSpecifiedSchema = Some(schema),
-        options = Map("basePath" -> basePath)
-      ).resolveRelation(checkFilesExist = false)
-      classic.Dataset.ofRows(cs, LogicalRelation(relation, isStreaming = true))
+    relation match {
+      case None =>
+        cs.internalCreateDataFrame(
+          cs.sparkContext.emptyRDD[org.apache.spark.sql.catalyst.InternalRow],
+          schema, isStreaming = true)
+      case Some(r) =>
+        classic.Dataset.ofRows(cs, LogicalRelation(r, isStreaming = true))
     }
   }
 }
